@@ -2,7 +2,7 @@
 
 Every input is a pure function of ``(workload spec, seed)``: Gaussian-mixture
 inliers plus uniform outliers, with the labels kept here and never handed to
-the package. The segmented inputs add a Zipf-distributed segment key; each
+the package. Every row also gets a Zipf-distributed segment key; each
 segment is the same mixture shifted by a small per-segment offset.
 """
 
@@ -23,7 +23,7 @@ class Dataset:
 
     features: np.ndarray  # (n, d) float64
     labels: np.ndarray  # (n,) int8
-    keys: np.ndarray | None = None  # (n,) int32 segment key
+    keys: np.ndarray  # (n,) int32 segment key
 
     @property
     def n(self) -> int:
@@ -31,43 +31,37 @@ class Dataset:
 
     def rows(self, lo: int, hi: int) -> "Dataset":
         """Rows ``lo:hi`` as a dataset of their own; their ids restart at 0."""
-        keys = None if self.keys is None else self.keys[lo:hi]
-        return Dataset(self.features[lo:hi], self.labels[lo:hi], keys)
+        return Dataset(self.features[lo:hi], self.labels[lo:hi], self.keys[lo:hi])
 
 
-def _mixture(rng: np.random.Generator, n: int, d: int, components: int) -> np.ndarray:
-    centers = rng.uniform(-4.0, 4.0, size=(components, d))
-    scales = rng.uniform(0.5, 1.5, size=components)
-    comp = rng.integers(0, components, size=n)
+OUTLIER_SHARE = 0.01
+COMPONENTS = 4
+ZIPF_S = 1.1
+
+
+def _mixture(rng: np.random.Generator, n: int, d: int) -> np.ndarray:
+    centers = rng.uniform(-4.0, 4.0, size=(COMPONENTS, d))
+    scales = rng.uniform(0.5, 1.5, size=COMPONENTS)
+    comp = rng.integers(0, COMPONENTS, size=n)
     return centers[comp] + rng.standard_normal((n, d)) * scales[comp, None]
 
 
-def generate(
-    seed: int,
-    n: int,
-    d: int,
-    outlier_share: float = 0.01,
-    components: int = 4,
-    segments: int = 0,
-    zipf_s: float = 1.1,
-) -> Dataset:
-    """n rows of dimension d; ``segments > 0`` adds Zipf-skewed keys."""
+def generate(seed: int, n: int, d: int, segments: int) -> Dataset:
+    """n rows of dimension d, each with one of ``segments`` Zipf-skewed keys."""
     rng = np.random.default_rng(np.random.SeedSequence([seed, n, d, segments]))
-    n_out = max(1, int(round(outlier_share * n)))
-    x = _mixture(rng, n, d, components)
+    n_out = max(1, int(round(OUTLIER_SHARE * n)))
+    x = _mixture(rng, n, d)
     labels = np.zeros(n, dtype=np.int8)
     out_rows = rng.choice(n, size=n_out, replace=False)
     labels[out_rows] = 1
     # outliers fill a box wider than every mixture component
     x[out_rows] = rng.uniform(-12.0, 12.0, size=(n_out, d))
-    keys = None
-    if segments > 0:
-        ranks = np.arange(1, segments + 1, dtype=np.float64)
-        p = ranks**-zipf_s
-        keys = rng.choice(segments, size=n, p=p / p.sum()).astype(np.int32)
-        # segments overlap, so one global forest still separates outliers
-        shift = rng.uniform(-2.0, 2.0, size=(segments, d))
-        x += shift[keys]
+    ranks = np.arange(1, segments + 1, dtype=np.float64)
+    p = ranks**-ZIPF_S
+    keys = rng.choice(segments, size=n, p=p / p.sum()).astype(np.int32)
+    # segments overlap, so one global forest still separates outliers
+    shift = rng.uniform(-2.0, 2.0, size=(segments, d))
+    x += shift[keys]
     return Dataset(features=x, labels=labels, keys=keys)
 
 
@@ -76,8 +70,8 @@ ROWS_PER_FILE = 1 << 13
 
 def write_parquet(ds: Dataset, path: str) -> None:
     """A parquet directory of ``ROWS_PER_FILE``-row part files with ``id``
-    long, ``features`` array<double>, and ``segment`` int when the dataset
-    is segmented. Labels stay behind."""
+    long, ``features`` array<double> and ``segment`` int. Labels stay
+    behind."""
     n, d = ds.features.shape
     os.makedirs(path, exist_ok=True)
     for part, lo in enumerate(range(0, n, ROWS_PER_FILE)):
@@ -87,7 +81,6 @@ def write_parquet(ds: Dataset, path: str) -> None:
         cols = {
             "id": pa.array(np.arange(lo, hi, dtype=np.int64)),
             "features": pa.ListArray.from_arrays(offsets, values),
+            "segment": pa.array(ds.keys[lo:hi]),
         }
-        if ds.keys is not None:
-            cols["segment"] = pa.array(ds.keys[lo:hi])
         pq.write_table(pa.table(cols), os.path.join(path, f"part-{part:05d}.parquet"))

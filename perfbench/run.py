@@ -26,10 +26,6 @@ SETUP_REPS = 3
 # Timed operations per run at least, so one slow operation cannot set the
 # run's median; a traced run also needs both a traced and an untraced one.
 MIN_OPS = 3
-# Percentiles tried, highest first, for the tail latency; one is reported
-# only when at least TAIL_BEYOND samples lie above it.
-TAIL_PERCENTILES = (99.9, 99.0, 95.0, 90.0, 75.0)
-TAIL_BEYOND = 10
 
 PER_LAYER_UNITS = {
     "spark.jobs": "count",
@@ -117,19 +113,6 @@ def peak_rss_mb() -> float:
     import resource
 
     return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
-
-
-def tail(latencies_ms: list[float]) -> tuple[float | None, float | None]:
-    """(percentile, value): the highest percentile in TAIL_PERCENTILES with
-    at least TAIL_BEYOND samples above it, or (None, None)."""
-    import numpy as np
-
-    lat = np.sort(np.asarray(latencies_ms))
-    for p in TAIL_PERCENTILES:
-        v = float(np.percentile(lat, p))
-        if int((lat > v).sum()) >= TAIL_BEYOND:
-            return p, v
-    return None, None
 
 
 class Bench:
@@ -220,11 +203,8 @@ class Bench:
         for k in sorted(extras):
             detail[k] = statistics.median(o["res"].extra[k] for o in plain)
         if wl.name == "online_score":
-            p, v = tail(lat_ms)
             detail.update(
                 request_p50_ms=statistics.median(lat_ms),
-                request_tail_percentile=p,
-                request_tail_ms=v,
                 requests_per_s=len(plain) / sum(o["s"] for o in plain),
             )
 
