@@ -23,9 +23,6 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 SETUP_REPS = 3
-# Timed operations per run at least, so one slow operation cannot set the
-# run's median; a traced run also needs both a traced and an untraced one.
-MIN_OPS = 3
 
 PER_LAYER_UNITS = {
     "spark.jobs": "count",
@@ -145,9 +142,9 @@ class Bench:
         return res
 
     def window(self, tracer, counters) -> list[dict]:
-        """Timed operations for ``seconds``, and at least MIN_OPS. A traced
-        run alternates traced and untraced operations so it can report the
-        tracing overhead."""
+        """Timed operations for ``seconds``, and at least the workload's
+        ``min_ops``. A traced run alternates traced and untraced operations
+        so it can report the tracing overhead."""
         ops = []
         end = time.perf_counter() + self.seconds
         while True:
@@ -160,7 +157,7 @@ class Bench:
                 dt = time.perf_counter() - t0
             tracer.enabled = False
             ops.append(dict(s=dt, res=res, traced=traced, spark=sc, request=root.id if root else None))
-            if len(ops) >= MIN_OPS and time.perf_counter() + dt > end:
+            if len(ops) >= self.wl.min_ops and time.perf_counter() + dt > end:
                 return ops
 
     def run(self) -> tuple[dict, dict]:
@@ -212,7 +209,7 @@ class Bench:
             "setup_s": (statistics.median(setup), "s"),
             "op_p50_ms": (statistics.median(lat_ms), "ms"),
             "score_rows_per_s": (
-                statistics.median(o["res"].rows_scored / o["res"].score_s for o in plain),
+                sum(o["res"].rows_scored for o in plain) / sum(o["res"].score_s for o in plain),
                 "rows/s",
             ),
             "auc": (auc, "ratio"),

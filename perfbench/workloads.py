@@ -73,6 +73,9 @@ class ProbeTarget:
 class Workload:
     name = ""
     warmup_ops = 1
+    # Timed operations per run at least, so one slow operation cannot set the
+    # run's median; a traced run also needs both a traced and an untraced one.
+    min_ops = 3
 
     def __init__(self, spark, run_dir: str, seed: int, size: dict) -> None:
         self.spark = spark
@@ -129,8 +132,10 @@ class GlobalFitScore(Workload):
     """fit, then a full transform aggregated over ``prediction``."""
 
     name = "global_fit_score"
-    # the first operation after one warm-up still runs about 15% slow
-    warmup_ops = 2
+    # The first, cold operation takes about three times as long as the rest;
+    # the second still runs 10-15% slow, which the median over at least five
+    # timed operations absorbs.
+    min_ops = 5
 
     def _estimator(self):
         from spark_iforest_spark import IForest
