@@ -8,8 +8,8 @@ with an idiomatic-Spark execution plan:
   semi-join of the driver's per-tree assignment table → one shuffle keyed by
   treeId → ``applyInPandas`` builds each tree in a task (model-wise
   parallelism, same as reference IForest.scala:324-330) → collect NodeData
-* scoring: one Arrow-vectorized ``pandas_udf`` (numpy level-synchronous
-  descent) — replaces the reference's per-row boxed-Vector UDF, its
+* scoring: one ``arrow_udf`` (numpy per-tree level-synchronous descent)
+  — replaces the reference's per-row boxed-Vector UDF, its
   published bottleneck
 * threshold: ``DataFrame.approxQuantile`` (identical built-in the reference
   calls, IForest.scala:101-105)
@@ -529,9 +529,8 @@ class IForestModel(Model, IForestParams, MLWritable, MLReadable):
             # (README.md:56). Preserved.
             psi = max_samples * dataset.count()
 
-        spark = dataset.sparkSession
         score_udf = make_score_udf(
-            self._packed_forest(), psi, bc=self._forest_broadcast(spark)
+            self._forest_broadcast(dataset.sparkSession), psi, features_col
         )
         scored = dataset.withColumn(
             score_col, score_udf(_features_as_array(dataset, features_col))

@@ -204,23 +204,22 @@ def pandas_to_forest(pdf) -> list[Tree]:
 class PackedForest:
     """All trees concatenated into single arrays for the batch scorer.
 
-    ``offsets[t]`` is the index of tree t's root. Child pointers are
-    ABSOLUTE indices into the packed arrays; leaves self-loop (left = right
-    = own id) so the descent is branchless — every row can take a step at
-    every level, rows already at a leaf just stay put. ``leaf_adjust``
-    precomputes c(numInstance) for leaves (0 for internal nodes), and
-    ``feature_index`` is clamped to 0 at leaves (never used, keeps gathers
-    in-bounds). One contiguous allocation → one broadcast payload.
+    ``offsets[t]`` is the index of tree t's root. Children are ABSOLUTE
+    indices, interleaved as ``kids[2*i] = right``, ``kids[2*i+1] = left``
+    so that a descent step is ``kids[2*i + (x < feature_value[i])]``.
+    Leaves self-loop (both kids = own id), so the descent is branchless —
+    rows already at a leaf just stay put. ``path_value`` holds each leaf's
+    whole contribution, depth + c(numInstance), and ``feature_index`` is
+    clamped to 0 at leaves (never used, keeps gathers in-bounds). One
+    contiguous allocation → one broadcast payload.
     """
 
     offsets: np.ndarray  # int64, len T+1
     feature_index: np.ndarray  # int64, clamped >= 0 (int64 keeps every
     #   fancy-index in the descent on numpy's same-dtype fast path)
     feature_value: np.ndarray  # float64
-    left: np.ndarray  # int64 absolute; leaf -> self
-    right: np.ndarray  # int64 absolute; leaf -> self
-    is_leaf: np.ndarray  # bool
-    not_leaf_f: np.ndarray  # float64 1.0 at internal nodes (depth increment)
+    kids: np.ndarray  # int64 absolute, len 2n: [2i] right, [2i+1] left
+    path_value: np.ndarray  # float64: depth + c(numInstance) at leaves, else 0
     leaf_adjust: np.ndarray  # float64: c(numInstance) at leaves, else 0
     max_depth: int  # deepest leaf across the forest
     tree_depth: np.ndarray  # int32, per-tree deepest leaf
@@ -240,39 +239,36 @@ def pack_forest(trees: list[Tree]) -> PackedForest:
     ni = np.concatenate([t.num_instance for t in trees])
     is_leaf = fi < 0
     n = len(fi)
-    ids = np.arange(n, dtype=np.int64)
-    left = np.concatenate(
-        [t.left.astype(np.int64) + off for t, off in zip(trees, offsets)]
-    )
-    right = np.concatenate(
-        [t.right.astype(np.int64) + off for t, off in zip(trees, offsets)]
-    )
-    left[is_leaf] = ids[is_leaf]
-    right[is_leaf] = ids[is_leaf]
+    kids = np.empty(2 * n, dtype=np.int64)
+    kids[0::2] = np.concatenate([t.right.astype(np.int64) + off for t, off in zip(trees, offsets)])
+    kids[1::2] = np.concatenate([t.left.astype(np.int64) + off for t, off in zip(trees, offsets)])
+    leaves = np.flatnonzero(is_leaf)
+    kids[2 * leaves] = kids[2 * leaves + 1] = leaves
     leaf_adjust = np.zeros(n, dtype=np.float64)
-    leaf_adjust[is_leaf] = _avg_length_vec(ni[is_leaf])
-    # depth of each node via one BFS-free pass: depth(child) = depth(parent)+1,
-    # parents always precede children in pre-order
+    leaf_adjust[leaves] = _avg_length_vec(ni[leaves])
+    # node depths, one vectorized step per level: the children of one
+    # level's internal nodes are the next level. A tree visits each node
+    # once; counting visits stops a loaded model whose pointers loop.
     depth = np.zeros(n, dtype=np.int32)
-    internal = ~is_leaf
-    for i in np.flatnonzero(internal):
-        depth[left[i]] = depth[i] + 1
-        depth[right[i]] = depth[i] + 1
-    tree_depth = np.array(
-        [
-            int(depth[offsets[t] : offsets[t + 1]].max()) if sizes[t] else 0
-            for t in range(len(trees))
-        ],
-        dtype=np.int32,
-    )
+    level = offsets[:-1][sizes > 0]
+    visited = d = 0
+    while len(level):
+        visited += len(level)
+        if visited > n:
+            raise ValueError("child pointers do not form trees: a node is reached twice")
+        depth[level] = d
+        level = level[~is_leaf[level]]
+        level = np.concatenate([kids[2 * level], kids[2 * level + 1]])
+        d += 1
+    tree_depth = np.zeros(len(trees), dtype=np.int32)
+    if n:
+        tree_depth[sizes > 0] = np.maximum.reduceat(depth, offsets[:-1][sizes > 0])
     return PackedForest(
         offsets=offsets,
         feature_index=np.where(is_leaf, 0, fi).astype(np.int64),
         feature_value=fv,
-        left=left,
-        right=right,
-        is_leaf=is_leaf,
-        not_leaf_f=internal.astype(np.float64),
+        kids=kids,
+        path_value=np.where(is_leaf, depth + leaf_adjust, 0.0),
         leaf_adjust=leaf_adjust,
         max_depth=int(depth[is_leaf].max()) if n else 0,
         tree_depth=tree_depth,

@@ -8,16 +8,19 @@ depth d contributes ``d + c(numInstance)``.
 
 The reference scores row-at-a-time inside a boxed-Vector UDF — its own
 published bottleneck (prediction 86 s vs training 34 s on "http",
-README.md:233-249). Here the descent is level-synchronous numpy
-index-chasing over the packed flat arrays: per Arrow batch of B rows we do
-O(avg_depth) vectorized gathers per tree instead of B×T Python calls.
+README.md:233-249). Here one ``arrow_udf`` turns each Arrow batch of B rows
+into a (B, d) matrix without a per-row pass, and the descent is numpy
+index-chasing over the packed flat arrays (``nodes.PackedForest``): per
+tree, B rows step down together, one child gather per level, so a batch
+costs O(Σ tree depth) vectorized steps instead of B×T Python calls.
 """
 
-# NOTE: no `from __future__ import annotations` here — pandas_udf infers its
+# NOTE: no `from __future__ import annotations` here — arrow_udf infers its
 # eval type from *resolved* type hints on the scoring closure.
 import math
 
 import numpy as np
+import pyarrow as pa
 
 from spark_iforest_spark.nodes import PackedForest
 
@@ -49,116 +52,43 @@ def _avg_length_vec(sizes: np.ndarray) -> np.ndarray:
     return out
 
 
-# Trees-per-block for the scoring descent. 1 = per-tree B-sized working
-# arrays (L2-resident, the shape that survives 32 concurrent workers).
-# Blocked variants (C,B) were measured in round 6 (SCALE.md): under full
-# 32-worker concurrency the extra page traffic erases the Python-call
-# savings, so 1 stays the default; the knob remains for narrow deployments
-# (few workers per host, large L3) where C=4-8 wins modestly.
-SCORE_TREE_BLOCK = 1
-
-
-def _path_lengths_blocked(forest: PackedForest, x: np.ndarray, block: int) -> np.ndarray:
-    """(C,B)-matrix descent over blocks of C trees: same gathers and
-    per-tree path lengths as the per-tree loop; only the final per-tree
-    ACCUMULATION order differs (block-sum vs running-sum), so results can
-    drift by float64 rounding in the last ulp — which is why the default
-    stays 1 (the bit-exact pins in tests/gates compare the per-tree
-    path). ~C× fewer Python-level iterations, C× larger working set."""
-    b = x.shape[0]
-    t = forest.num_trees
-    fi, fv = forest.feature_index, forest.feature_value
-    left, right = forest.left, forest.right
-    not_leaf_f, leaf_adjust = forest.not_leaf_f, forest.leaf_adjust
-    xt = np.ascontiguousarray(x.T)
-    flat = xt.reshape(-1)
-    cols = np.arange(b, dtype=np.int64)
-    total = np.zeros(b, dtype=np.float64)
-    for c0 in range(0, t, block):
-        c1 = min(c0 + block, t)
-        c = c1 - c0
-        node = np.repeat(
-            np.asarray(forest.offsets[c0:c1], dtype=np.int64), b
-        ).reshape(c, b)
-        depth = np.zeros((c, b), dtype=np.float64)
-        lin = np.empty((c, b), dtype=np.int64)
-        for _ in range(int(np.max(forest.tree_depth[c0:c1]))):
-            np.multiply(fi[node], b, out=lin)
-            lin += cols
-            val = flat[lin]
-            go_left = val < fv[node]
-            depth += not_leaf_f[node]
-            node = np.where(go_left, left[node], right[node])
-        total += depth.sum(axis=0)
-        total += leaf_adjust[node].sum(axis=0)
-    return total / t
-
-
 def path_lengths(forest: PackedForest, x: np.ndarray) -> np.ndarray:
     """Average root-to-leaf path length over all trees for each row of x.
 
     x: (B, d) float64. Returns (B,) float64.
 
-    Branchless level-synchronous descent over a (T, B) node matrix: ALL
-    trees advance ALL rows one level per iteration (leaves self-loop, so no
-    active-set bookkeeping), for forest.max_depth iterations total. Python
-    overhead is O(depth) instead of O(trees × depth); the inner work is
-    whole-matrix gathers that numpy vectorizes.
+    One tree at a time, all B rows advance one level per step for that
+    tree's ``tree_depth`` steps (leaves self-loop, so no active-set
+    bookkeeping). A step is one child gather over the interleaved
+    ``kids``: ``node = kids[2*node + (x < fv[node])]``; a NaN feature
+    compares False and goes right, as in the reference. The leaf reached
+    adds its precomputed ``path_value`` (depth + c(numInstance)).
     """
-    if SCORE_TREE_BLOCK > 1:
-        return _path_lengths_blocked(forest, x, SCORE_TREE_BLOCK)
     b = x.shape[0]
     t = forest.num_trees
-    fi, fv = forest.feature_index, forest.feature_value
-    left, right = forest.left, forest.right
-    not_leaf_f, leaf_adjust = forest.not_leaf_f, forest.leaf_adjust
+    fv, kids, path_value = forest.feature_value, forest.kids, forest.path_value
 
-    # Per-tree loop with B-sized working arrays. A (T,B) matrix formulation
-    # is ~2x fewer python calls but allocates ~(6 levels)x(T*B*8B) of fresh
-    # pages per batch — under 32 concurrent workers that's GBs/s of mmap +
-    # page-zeroing and it collapses (measured 27x slowdown). B-sized arrays
-    # (~80 KB) keep the whole working set L2-resident and scale linearly.
-    xt = np.ascontiguousarray(x.T)  # (d, B): one contiguous row per feature
-    d = xt.shape[0]
-    flat = xt.reshape(-1)
+    # B-sized working arrays, one tree at a time: a (T,B) matrix
+    # formulation makes fewer Python calls but allocates T*B*8 bytes of
+    # fresh pages per step, which collapsed under 32 concurrent workers
+    # (measured 27x slowdown); ~128 KB arrays stay L2-resident.
+    flat = np.ascontiguousarray(x.T).reshape(-1)  # x[row, f] == flat[f*B + row]
+    fib = forest.feature_index * b
     cols = np.arange(b, dtype=np.int64)
     total = np.zeros(b, dtype=np.float64)
-    depth = np.empty(b, dtype=np.float64)
-    node = np.empty(b, dtype=np.int64)
-    lin = np.empty(b, dtype=np.int64)
     for ti in range(t):
-        node[:] = forest.offsets[ti]
-        depth[:] = 0.0
+        node = np.full(b, forest.offsets[ti], dtype=np.int64)
         for _ in range(forest.tree_depth[ti]):
-            # val = x[row, fi[node]] via linear index into x.T:
-            # lin = fi[node]*B + row  (fi already int64)
-            np.multiply(fi[node], b, out=lin)
-            lin += cols
-            val = flat[lin]
-            go_left = val < fv[node]
-            depth += not_leaf_f[node]
-            node = np.where(go_left, left[node], right[node])
-        total += depth
-        total += leaf_adjust[node]
+            go_left = flat[fib[node] + cols] < fv[node]
+            node = kids[2 * node + go_left]
+        total += path_value[node]
     return total / t
 
 
-def anomaly_scores(
-    forest: PackedForest, x: np.ndarray, psi: float, block: int | None = None
-) -> np.ndarray:
-    """score = 2^(-avgPathLength / c(psi)) (IForest.scala:92-99).
-
-    ``block`` overrides SCORE_TREE_BLOCK (worker closures capture the
-    driver's setting at UDF build time and pass it explicitly — a module
-    variable set on the driver does not reach executor pythons)."""
+def anomaly_scores(forest: PackedForest, x: np.ndarray, psi: float) -> np.ndarray:
+    """score = 2^(-avgPathLength / c(psi)) (IForest.scala:92-99)."""
     norm = avg_length(psi)
-    if block is None:
-        block = SCORE_TREE_BLOCK
-    apl = (
-        _path_lengths_blocked(forest, x, block)
-        if block > 1
-        else path_lengths(forest, x)
-    )
+    apl = path_lengths(forest, x)
     if norm == 0.0:
         # psi < 2: degenerate normalizer; reference would divide by zero.
         # Guard with the standard convention score=1 for apl=0 else 0 exponent.
@@ -166,29 +96,42 @@ def anomaly_scores(
     return np.power(2.0, -apl / norm)
 
 
-def make_score_udf(forest: PackedForest, psi: float, spark=None, bc=None):
-    """Build a pandas_udf(array<double> -> double) scoring closure.
+def _features_matrix(features: pa.Array, features_col: str) -> np.ndarray:
+    """A list<double> Arrow array as a (B, d) float64 matrix without a
+    per-row Python pass. ``flatten`` silently drops null lists, so null
+    and uneven rows are rejected before it rather than mis-aligning every
+    row after them. A null element inside a row becomes NaN."""
+    if features.null_count:
+        raise ValueError(
+            f"features column '{features_col}' has {features.null_count} null "
+            "row(s); every row to score needs a feature vector"
+        )
+    b = len(features)
+    lengths = np.diff(features.offsets.to_numpy())
+    if b and (lengths != lengths[0]).any():
+        raise ValueError(
+            f"features column '{features_col}' has rows of different lengths "
+            f"({lengths.min()}..{lengths.max()}); every row needs the same dimension"
+        )
+    d = int(lengths[0]) if b else 0
+    return features.flatten().to_numpy(zero_copy_only=False).reshape(b, d)
 
-    Ship the forest via sparkContext.broadcast (one copy per executor,
-    torrent transfer) instead of pickling it into every task closure — the
-    reference broadcasts its model the same way (IForest.scala:90). Pass a
-    pre-built ``bc`` to reuse one broadcast across many transform() calls
-    (IForestModel caches it per application); otherwise a SparkSession
-    creates a fresh one.
+
+def make_score_udf(bc, psi: float, features_col: str):
+    """Build an arrow_udf(array<double> -> double) scoring closure.
+
+    ``bc`` is a sparkContext.broadcast of the PackedForest (one copy per
+    executor, torrent transfer), the way the reference broadcasts its model
+    (IForest.scala:90); IForestModel reuses one per application. The
+    closure holds only the broadcast handle, so tasks do not also carry the
+    forest. ``features_col`` names the input column in the errors raised
+    for null or uneven rows.
     """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    if bc is None and spark is not None:
-        bc = spark.sparkContext.broadcast(forest)
-    blk = SCORE_TREE_BLOCK  # captured by value; ships inside the closure
-
-    @pandas_udf("double")
-    def score_udf(features: pd.Series) -> pd.Series:
-        fo = bc.value if bc is not None else forest
-        x = np.asarray(features.to_list(), dtype=np.float64)
-        if x.ndim != 2:  # ragged rows — fall back to per-row padding-free path
-            raise ValueError("feature arrays must be fixed-length per batch")
-        return pd.Series(anomaly_scores(fo, x, psi, block=blk))
+    @arrow_udf("double")
+    def score_udf(features: pa.Array) -> pa.Array:
+        x = _features_matrix(features, features_col)
+        return pa.array(anomaly_scores(bc.value, x, psi))
 
     return score_udf

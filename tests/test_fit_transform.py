@@ -102,6 +102,23 @@ def test_array_double_features(spark):
     assert out.where("anomalyScore is null").count() == 0
 
 
+@pytest.mark.parametrize(
+    "bad_row, message",
+    [(None, "null row"), ([1.0], "different lengths")],
+    ids=["null", "uneven"],
+)
+def test_transform_rejects_bad_feature_rows(spark, bad_row, message):
+    # a batch holding a null or shorter row fails as a whole, naming the
+    # column; coalesce(1) puts both rows into one Arrow batch
+    train = spark.createDataFrame(
+        [([float(i), float(-i)],) for i in range(20)], "vec array<double>"
+    )
+    model = IForest(featuresCol="vec", numTrees=5, seed=1).fit(train)
+    df = spark.createDataFrame([([1.0, 2.0],), (bad_row,)], "vec array<double>")
+    with pytest.raises(Exception, match=f"features column 'vec' .*{message}"):
+        model.transform(df.coalesce(1)).collect()
+
+
 def test_maxsamples_gt_rows_fails(spark):
     # IForestSuite.scala:202-224 boundary: maxSamples > totalRows fails at fit
     df = iforest_data(spark, 10, 2)

@@ -60,6 +60,58 @@ def test_roundtrip_and_scores(x, max_depth, seed):
     assert ((s1 > 0) & (s1 <= 1)).all()
 
 
+def _walk_path_length(trees, row):
+    """Mean path length of one row by walking each unpacked Tree."""
+    total = 0.0
+    for t in trees:
+        node = depth = 0
+        while t.feature_index[node] >= 0:
+            if row[t.feature_index[node]] < t.feature_value[node]:
+                node = t.left[node]
+            else:
+                node = t.right[node]
+            depth += 1
+        total += depth + avg_length(float(t.num_instance[node]))
+    return total / len(trees)
+
+
+@given(matrices, st.integers(0, 8), st.integers(1, 10), st.integers(0, 2**31 - 1))
+@settings(max_examples=40, deadline=None)
+def test_kernel_matches_per_row_walk(x, n_rows, max_depth, seed):
+    rng = np.random.default_rng(seed)
+    trees = [train_tree(x, max_depth, 1.0, seed=seed, tree_id=i) for i in range(3)]
+    trees.append(train_tree(x[:1], max_depth, 1.0, seed=seed, tree_id=3))  # one leaf
+    assert trees[-1].num_nodes == 1
+    # training rows, fresh rows, and rows sitting exactly on split values
+    # (a tie goes right)
+    splits = trees[0].feature_value[trees[0].feature_index >= 0][: n_rows // 3]
+    batch = np.vstack([
+        x[: n_rows // 3],
+        rng.normal(0.5, 0.5, (n_rows - n_rows // 3 - len(splits), x.shape[1])),
+        np.repeat(splits[:, None], x.shape[1], axis=1),
+    ])
+    psi = float(len(x))
+    want = np.array([2.0 ** (-_walk_path_length(trees, r) / avg_length(psi)) for r in batch])
+    forest = pack_forest(trees)
+    got = anomaly_scores(forest, batch, psi)
+    assert got.shape == (len(batch),)
+    np.testing.assert_allclose(got, want, rtol=1e-12, atol=0)
+    assert anomaly_scores(forest, batch[:0], psi).shape == (0,)
+
+    # NaN compares False against every split, so an all-NaN row takes the
+    # right child at every internal node
+    right_most = 0.0
+    for t in trees:
+        node = depth = 0
+        while t.feature_index[node] >= 0:
+            node, depth = t.right[node], depth + 1
+        right_most += depth + avg_length(float(t.num_instance[node]))
+    nan_row = np.full((1, x.shape[1]), np.nan)
+    np.testing.assert_allclose(
+        path_lengths(forest, nan_row), [right_most / len(trees)], rtol=1e-12, atol=0
+    )
+
+
 @given(st.floats(0, 1e9, allow_nan=False))
 def test_avg_length_nonnegative_monotone_pieces(n):
     c = avg_length(n)

@@ -34,6 +34,14 @@ def test_avg_length_formula():
         assert avg_length(n) == pytest.approx(expected)
 
 
+def test_pack_rejects_child_pointer_loop():
+    # a loaded node table is not checked for cycles; packing must stop on
+    # one instead of descending forever
+    tree = make_tree([(0, 0.5, 1, 2, 0), (0, 0.2, 0, 0, 0), (-1, -1.0, -1, -1, 3)])
+    with pytest.raises(ValueError, match="do not form trees"):
+        pack_forest([tree])
+
+
 def test_single_node_tree():
     # a lone leaf with numInstance=5: every row's path length = 0 + c(5)
     tree = make_tree([(-1, -1.0, -1, -1, 5)])
