@@ -4,10 +4,11 @@ Capability-parity rebuild of the reference Scala implementation
 (/root/reference/src/main/scala/org/apache/spark/ml/iforest/IForest.scala)
 with an idiomatic-Spark execution plan:
 
-* training: deterministic hash-based candidate-pool sampling → broadcast
-  semi-join of the driver's per-tree assignment table → one shuffle keyed by
-  treeId → ``applyInPandas`` builds each tree in a task (model-wise
-  parallelism, same as reference IForest.scala:324-330) → collect NodeData
+* training: a hash-based Bernoulli candidate pool, collected to the driver
+  with one ``toArrow`` and ordered there by hash → driver-side per-tree
+  index plan → pool and plan broadcast once → ``mapInArrow`` over the tree
+  ids trains a share of the trees in each task (model-wise parallelism,
+  same as reference IForest.scala:324-330) → collect the flat node table
 * scoring: one ``arrow_udf`` (numpy per-tree level-synchronous descent)
   — replaces the reference's per-row boxed-Vector UDF, its
   published bottleneck
@@ -19,20 +20,18 @@ with an idiomatic-Spark execution plan:
 Scale notes (100 TB / 1000 executors): when maxSamples is an absolute count
 (the practical setting, e.g. 256), the candidate pool is O(numTrees *
 maxSamples) rows regardless of input size — one Bernoulli-filtered scan
-(filter pushed to the parquet reader's output), one tiny sort, one shuffle
-of ~numTrees*maxSamples rows. Scoring is embarrassingly data-parallel with
-the forest broadcast once per executor. With maxSamples <= 1 (a *fraction*
-of the input) the reference semantics require numTrees*fraction*n rows to
-converge on numTrees tasks — inherently unscalable for large fractions; we
-preserve the semantics and document the cliff.
+(filter pushed to the parquet reader's output) whose output is collected,
+sorted on the driver and broadcast; no shuffle. Scoring is embarrassingly
+data-parallel with the forest broadcast once per executor. With
+maxSamples <= 1 (a *fraction* of the input) the reference semantics make
+the pool min(n, ~1.1*numTrees*fraction*n) rows, all of which must fit in
+driver memory (the 256M warning counts them) — inherently unscalable for
+large fractions; we preserve the semantics and document the cliff.
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
-import pandas as pd
 from pyspark.ml import Estimator, Model
 from pyspark.ml.param import Params
 from pyspark.ml.util import (
@@ -46,10 +45,8 @@ from pyspark.ml.util import (
     MLWriter,
 )
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, DoubleType, NumericType
-from pyspark.sql.window import Window
+from pyspark.sql.types import ArrayType, NumericType
 
-from spark_iforest_spark.checkpoint import snapshot
 from spark_iforest_spark.nodes import (
     FLAT_NODE_SCHEMA,
     PackedForest,
@@ -60,14 +57,11 @@ from spark_iforest_spark.nodes import (
     tree_to_rows,
 )
 from spark_iforest_spark.params import IForestParams
-from spark_iforest_spark.scorer import avg_length, make_score_udf
-from spark_iforest_spark.trainer import train_tree
+from spark_iforest_spark.scorer import _features_matrix, make_score_udf
+from spark_iforest_spark.trainer import make_build_fn
 
 _POOL_OVERSAMPLE = 1.1
 _POOL_SLACK = 1024
-# above this pool size, rid assignment switches from one global sort to
-# partition-local row numbers + driver offsets (distributed zipWithIndex)
-_POOL_GLOBAL_SORT_MAX = 20_000_000
 
 
 def _features_as_array(df: DataFrame, features_col: str) -> F.Column:
@@ -162,35 +156,19 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
         return self._checked_set(anomalyScoreCol=value)
 
     # ------------------------------------------------------------------ fit
-    @staticmethod
-    def _phase(name: str, t0: float) -> float:
-        """Optional phase timing to stderr (SPARK_IFOREST_TIMING=1)."""
-        import os
-        import sys
-        import time
-
-        t1 = time.time()
-        if os.environ.get("SPARK_IFOREST_TIMING"):
-            print(f"[iforest-fit] {name}: {t1 - t0:.2f}s", file=sys.stderr, flush=True)
-        return t1
-
     def _fit(self, dataset: DataFrame) -> "IForestModel":
-        import time as _time
-
-        _t = _time.time()
         self._validate_params()
         features_col = self.getFeaturesCol()
         _validate_features_schema(dataset, features_col)
         num_trees = self.getNumTrees()
         max_samples = self.getMaxSamples()
-        bootstrap = self.getBootstrap()
         seed = self.getSeed()
         spark = dataset.sparkSession
+        sc = spark.sparkContext
 
         feats = dataset.select(_features_as_array(dataset, features_col).alias("features"))
 
         n = feats.count()
-        _t = self._phase("count", _t)
         if n == 0:
             raise ValueError("cannot fit on an empty dataset")
         fraction = max_samples / n if max_samples > 1 else max_samples
@@ -200,8 +178,11 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
         psi = int(fraction * n)  # possibleMaxSamples, IForest.scala:412
         psi = max(psi, 1)
 
-        # driver-memory guard, same arithmetic as IForest.scala:507-511
-        usage_mb = num_trees * 2 * psi * 32 / (1024 * 1024)
+        pool, plan = self._sample_assign(feats, n, psi, num_trees, features_col)
+
+        # driver-memory guard: the arithmetic of IForest.scala:507-511 plus
+        # the collected pool
+        usage_mb = (num_trees * 2 * psi * 32 + pool.nbytes) / (1024 * 1024)
         if usage_mb > 256:
             import warnings
 
@@ -211,60 +192,22 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
                 "numTrees or maxSamples."
             )
 
-        rng = np.random.default_rng(seed & 0x7FFFFFFF)
-
-        if fraction >= 1.0 and not bootstrap:
-            # Every tree trains on ALL rows (reference reservoir k=n of n) —
-            # no ids needed: broadcast-cross-join the tree-id table.
-            tree_ids = spark.range(num_trees).select(F.col("id").cast("int").alias("treeId"))
-            joined = feats.crossJoin(F.broadcast(tree_ids))
-        else:
-            joined = self._sample_assign(spark, feats, n, psi, num_trees, bootstrap, rng)
-        _t = self._phase("sample_assign", _t)
-
-        max_depth = self.getMaxDepth()
-        max_features = self.getMaxFeatures()
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            tree_id = int(pdf["treeId"].iloc[0])
-            x = np.asarray(pdf["features"].to_list(), dtype=np.float64)
-            tree = train_tree(x, max_depth, max_features, seed, tree_id)
-            return pd.DataFrame(
-                tree_to_rows(tree_id, tree),
-                columns=[
-                    "treeID",
-                    "id",
-                    "featureIndex",
-                    "featureValue",
-                    "leftChild",
-                    "rightChild",
-                    "numInstance",
-                ],
+        # Model-wise parallel build (reference IForest.scala:324-330): the
+        # pool and plan ship once as a broadcast, each task of a tree-id
+        # range trains its share of the trees and returns their node arrays
+        # as Arrow batches. No shuffle, so AQE cannot coalesce the build
+        # into one task.
+        bc = sc.broadcast((pool, plan))
+        try:
+            build = make_build_fn(bc, self.getMaxDepth(), self.getMaxFeatures(), seed)
+            nodes = (
+                spark.range(num_trees, numPartitions=min(num_trees, sc.defaultParallelism))
+                .mapInArrow(build, FLAT_NODE_SCHEMA)
+                .toArrow()
             )
-
-        # Arrow collection + vectorized assembly (round 6): toPandas moves
-        # the ~numTrees*2*psi node rows in columnar batches and
-        # pandas_to_forest slices numpy columns — vs ~7 Python field
-        # accesses per node through Row objects (profiled ~0.5 s at 100
-        # trees).
-        # Explicit repartition by treeId (round 7): the assignment relation
-        # is only numTrees*psi rows (~a few MB), so AQE's size-based
-        # coalescing folds the grouped stage into ONE partition and all
-        # numTrees tree builds run serially in a single Python worker —
-        # the same cliff segmented._cluster_by_key documents. A
-        # user-specified partition count is exempt from coalescing and
-        # satisfies the grouped distribution requirement directly.
-        from spark_iforest_spark.functions import shuffle_partitions
-
-        n_build = min(num_trees, shuffle_partitions(spark))
-        node_pdf = (
-            joined.repartition(n_build, "treeId")
-            .groupBy("treeId")
-            .applyInPandas(build, schema=FLAT_NODE_SCHEMA)
-            .toPandas()
-        )
-        _t = self._phase("tree_build_collect", _t)
-        trees = pandas_to_forest(node_pdf)
+        finally:
+            bc.destroy()
+        trees = pandas_to_forest(nodes)
         if len(trees) != num_trees:
             raise RuntimeError(f"expected {num_trees} trees, built {len(trees)}")
 
@@ -280,7 +223,6 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
         # second count job (consumed once, see _transform).
         model._threshold_n_hint = n
         predictions = model.transform(dataset)
-        _t = self._phase("eager_transform_threshold", _t)
         model._summary = IForestSummary(
             predictions,
             features_col,
@@ -291,24 +233,28 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
 
     def _sample_assign(
         self,
-        spark,
         feats: DataFrame,
         n: int,
         psi: int,
         num_trees: int,
-        bootstrap: bool,
-        rng: np.random.Generator,
-    ) -> DataFrame:
-        """Per-tree sample via candidate pool + driver assignment table.
+        features_col: str,
+    ) -> tuple[np.ndarray, np.ndarray | None]:
+        """Per-tree samples as a candidate pool plus a driver-side plan.
 
         Uniform k-of-n sampling composes: a Bernoulli-sampled pool of the
         input is a uniform subset, and a uniform psi-of-pool draw is then a
-        uniform psi-of-n draw. This keeps the shuffled volume at
+        uniform psi-of-n draw. This keeps what reaches the driver at
         O(numTrees * psi) rows no matter how large the input is, instead of
         zipWithIndex-ing the whole dataset like the reference
-        (IForest.scala:471-483). Row "ids" come from a hash of the feature
-        vector, so the plan is deterministic for a given (data, seed)
-        regardless of partition layout.
+        (IForest.scala:471-483). The pool is collected with one
+        ``toArrow`` and ordered by the 64-bit hash of each feature vector,
+        so the plan is deterministic for a given (data, seed) regardless
+        of partition layout.
+
+        Returns ``(pool, plan)``: the (m, d) pool matrix in hash order, and
+        the (numTrees, psi) pool row indices each tree trains on, or None
+        when every tree trains on the whole input (psi == n without
+        bootstrap, the reference's reservoir k=n of n).
 
         For bootstrap, draws-with-replacement from the pool only
         approximate draws-with-replacement from the full input (duplicate
@@ -327,115 +273,33 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
         pool_fraction = min(1.0, target_pool / n)
 
         # u (30-bit hash scaled to [0,1)) drives the Bernoulli pool filter;
-        # rid ORDER uses the full 64-bit hash — 30 bits collide between
-        # distinct vectors at pool sizes >~ 2^15 and row_number tie order is
-        # partition-layout-dependent, so sorting by u alone would weaken the
-        # layout-independence claim. Full-64-bit ties happen only for
-        # identical feature vectors, which are interchangeable for training.
+        # the pool ORDER uses the full 64-bit hash — 30 bits collide between
+        # distinct vectors at pool sizes >~ 2^15. Full-64-bit ties happen
+        # only for identical feature vectors, which are interchangeable for
+        # training, so the stable sort's tie order does not matter.
         denom = 1 << 30
         h = F.xxhash64(F.col("features"), F.lit(seed))
-        pool = feats.select(
-            F.col("features"), h.alias("h"), (F.pmod(h, F.lit(denom)) / denom).alias("u")
-        )
+        pool = feats.select("features", h.alias("h"))
         if pool_fraction < 1.0:
-            pool = pool.where(F.col("u") < pool_fraction)
-        # pools are localCheckpoint'd, not cache()d: same one-pass
-        # materialization, but the lineage truncation freezes the partition
-        # layout (no silent recompute after cache eviction) and Spark's
-        # ContextCleaner reclaims the blocks once the fit drops its
-        # reference. TRADEOFF: localCheckpoint blocks are NOT fault-tolerant
-        # — losing an executor mid-fit fails the job instead of recomputing
-        # as cache() would. Acceptable here because a fit is one bounded job
-        # (re-run it); deterministic rids make the retry bit-identical. For
-        # clusters where executor loss is routine, set
-        # spark.spark_iforest.reliableCheckpoint=true + a checkpoint dir
-        # (checkpoint.snapshot) at the cost of a distributed-FS round-trip.
-        # references — cache() entries would pin executor memory forever.
-        if target_pool <= _POOL_GLOBAL_SORT_MAX:
-            # absolute-maxSamples regime: pool is O(numTrees*maxSamples) rows
-            # regardless of input size — a single-task sort is cheap and makes
-            # rids (hence the whole forest) independent of partition layout.
-            pool = snapshot(
-                pool.withColumn(
-                    "rid", F.row_number().over(Window.orderBy(F.col("h"))) - F.lit(1)
-                ),
-                eager=False,
-            )
-        else:
-            # fractional-maxSamples regime at large n: psi scales with the
-            # input, a global sort would bottleneck — assign rids as
-            # partition-local row_numbers + driver-computed partition offsets
-            # (the classic distributed zipWithIndex). rids then depend on the
-            # partition layout; the sampling DISTRIBUTION is unchanged, only
-            # bitwise run-to-run reproducibility narrows to fixed layouts.
-            part_pool = snapshot(
-                pool.withColumn("part", F.spark_partition_id()), eager=False
-            )
-            counts = {
-                r["part"]: r["cnt"]
-                for r in part_pool.groupBy("part").agg(F.count(F.lit(1)).alias("cnt")).collect()
-            }
-            offsets, acc = {}, 0
-            for p in sorted(counts):
-                offsets[p] = acc
-                acc += counts[p]
-            offset_col = F.element_at(
-                F.create_map(
-                    *[F.lit(x) for kv in offsets.items() for x in kv]
-                ),
-                F.col("part"),
-            )
-            w = Window.partitionBy("part").orderBy(F.col("h"))
-            pool = part_pool.withColumn(
-                "rid", F.row_number().over(w) - F.lit(1) + offset_col
-            ).drop("part")
-        m = pool.count()
-        if m < psi:
-            # Bernoulli undershoot (possible only on tiny inputs): use all
-            # rows, hash-ordered so the fallback stays layout-independent.
-            pool = feats.select(
-                "features",
-                F.row_number().over(Window.orderBy(h)).alias("rid"),
-            ).withColumn("rid", F.col("rid") - F.lit(1))
-            m = n
+            pool = pool.where(F.pmod(h, F.lit(denom)) / denom < pool_fraction)
+        table = pool.toArrow()
+        if table.num_rows < psi:
+            # Bernoulli undershoot (possible only on tiny inputs): use all rows
+            table = feats.select("features", h.alias("h")).toArrow()
+        order = np.argsort(table["h"].to_numpy(), kind="stable")
+        x = _features_matrix(table["features"].combine_chunks(), features_col)[order]
+        m = len(x)
 
-        # Driver-side assignment plan (reference O2-O4, IForest.scala:414-462):
-        # numTrees × psi indices into the pool.
-        tree_col, rid_col, copies_col = [], [], []
-        for tree_id in range(num_trees):
-            if bootstrap:
-                draws = rng.integers(0, m, size=psi)
-                rids, copies = np.unique(draws, return_counts=True)
-            else:
-                rids = rng.choice(m, size=psi, replace=False)
-                copies = np.ones(len(rids), dtype=np.int64)
-            tree_col.append(np.full(len(rids), tree_id, dtype=np.int32))
-            rid_col.append(rids.astype(np.int64))
-            copies_col.append(copies.astype(np.int32))
-
-        assign_pdf = pd.DataFrame(
-            {
-                "rid": np.concatenate(rid_col),
-                "treeId": np.concatenate(tree_col),
-                "copies": np.concatenate(copies_col),
-            }
-        )
-        # explicit schema: without it createDataFrame runs driver-side
-        # schema inference over all numTrees×psi rows (~1.4 s of pure
-        # Python at 100 trees — profiled round 6); with it the conversion
-        # is a typed fast path
-        assign = spark.createDataFrame(
-            assign_pdf, schema="rid long, treeId int, copies int"
-        )
-
-        joined = pool.join(F.broadcast(assign), "rid", "inner")
-        if bootstrap:
-            joined = joined.select(
-                "features", "treeId", F.explode(F.expr("sequence(1, copies)")).alias("_copy")
-            ).drop("_copy")
-        else:
-            joined = joined.select("features", "treeId")
-        return joined
+        # Driver-side sampling plan (reference O2-O4, IForest.scala:414-462).
+        bootstrap = self.getBootstrap()
+        if psi == n and not bootstrap:
+            return x, None
+        rng = np.random.default_rng(seed & 0x7FFFFFFF)
+        draws = [
+            rng.integers(0, m, size=psi) if bootstrap else rng.choice(m, size=psi, replace=False)
+            for _ in range(num_trees)
+        ]
+        return x, np.stack(draws)
 
     # Params.copy default (shallow copy + param re-copy) is sufficient.
 

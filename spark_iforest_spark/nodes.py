@@ -21,6 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 
 # Parquet schema of one persisted node row (reference EnsembleNodeData,
 # IForest.scala:189-196,225-228: nested struct {treeID, nodeData{...}}).
@@ -30,12 +31,13 @@ NODE_DATA_SCHEMA = (
     "leftChild: INT, rightChild: INT, numInstance: BIGINT> NOT NULL"
 )
 
-# Flat variant used on the applyInPandas wire during training (cheaper than
+# Flat variant used on the mapInArrow wire during training (cheaper than
 # a nested struct through Arrow; nested only at the persistence boundary).
 FLAT_NODE_SCHEMA = (
     "treeID INT, id INT, featureIndex INT, featureValue DOUBLE, "
     "leftChild INT, rightChild INT, numInstance BIGINT"
 )
+_FLAT_NODE_COLS = [c.split()[0] for c in FLAT_NODE_SCHEMA.split(", ")]
 
 
 @dataclass
@@ -124,6 +126,21 @@ def tree_to_rows(tree_id: int, tree: Tree) -> list[tuple]:
     ]
 
 
+def tree_to_batch(tree_id: int, tree: Tree) -> pa.RecordBatch:
+    """One tree as a ``FLAT_NODE_SCHEMA`` Arrow batch, column by column."""
+    n = tree.num_nodes
+    cols = [
+        np.full(n, tree_id, dtype=np.int32),
+        np.arange(n, dtype=np.int32),
+        tree.feature_index,
+        tree.feature_value,
+        tree.left,
+        tree.right,
+        tree.num_instance,
+    ]
+    return pa.RecordBatch.from_arrays([pa.array(c) for c in cols], names=_FLAT_NODE_COLS)
+
+
 def rows_to_forest(rows) -> list[Tree]:
     """Rebuild a forest from flat node rows.
 
@@ -163,9 +180,10 @@ def rows_to_forest(rows) -> list[Tree]:
 
 
 def pandas_to_forest(pdf) -> list[Tree]:
-    """Vectorized ``rows_to_forest`` for an Arrow-collected node table
-    (round 6): the fit path moves ~25k nodes × 7 fields through numpy
-    column slices instead of ~175k per-field Python calls. Same load
+    """Vectorized ``rows_to_forest`` for an Arrow-collected node table, as
+    a pandas DataFrame or a pyarrow Table (round 6): the fit path moves
+    ~25k nodes × 7 fields through numpy column slices instead of ~175k
+    per-field Python calls. Same load
     invariants (dense tree ids, dense per-tree node ids, root 0) enforced
     vectorized; ``rows_to_forest`` remains for Row/dict iterables."""
     tid_raw = pdf["treeID"].to_numpy()
@@ -221,6 +239,8 @@ class PackedForest:
     kids: np.ndarray  # int64 absolute, len 2n: [2i] right, [2i+1] left
     path_value: np.ndarray  # float64: depth + c(numInstance) at leaves, else 0
     leaf_adjust: np.ndarray  # float64: c(numInstance) at leaves, else 0
+    num_features: int  # 1 + the largest split feature index: the row
+    #   width the descent reads (0 for a forest of single leaves)
     max_depth: int  # deepest leaf across the forest
     tree_depth: np.ndarray  # int32, per-tree deepest leaf
 
@@ -270,6 +290,7 @@ def pack_forest(trees: list[Tree]) -> PackedForest:
         kids=kids,
         path_value=np.where(is_leaf, depth + leaf_adjust, 0.0),
         leaf_adjust=leaf_adjust,
+        num_features=int(fi.max()) + 1 if n else 0,
         max_depth=int(depth[is_leaf].max()) if n else 0,
         tree_depth=tree_depth,
     )

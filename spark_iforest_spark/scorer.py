@@ -85,8 +85,22 @@ def path_lengths(forest: PackedForest, x: np.ndarray) -> np.ndarray:
     return total / t
 
 
-def anomaly_scores(forest: PackedForest, x: np.ndarray, psi: float) -> np.ndarray:
-    """score = 2^(-avgPathLength / c(psi)) (IForest.scala:92-99)."""
+def anomaly_scores(
+    forest: PackedForest, x: np.ndarray, psi: float, features_col: str = "features"
+) -> np.ndarray:
+    """score = 2^(-avgPathLength / c(psi)) (IForest.scala:92-99).
+
+    Rows narrower than ``forest.num_features`` raise a ``ValueError``
+    naming ``features_col`` and both widths. Wider rows are scored on
+    their first columns: the model keeps no training dimension to check
+    them against.
+    """
+    if len(x) and x.shape[1] < forest.num_features:
+        raise ValueError(
+            f"features column '{features_col}' has rows of width {x.shape[1]}, but the "
+            f"forest splits on feature index {forest.num_features - 1}; rows need a "
+            f"width of at least {forest.num_features}"
+        )
     norm = avg_length(psi)
     apl = path_lengths(forest, x)
     if norm == 0.0:
@@ -104,7 +118,7 @@ def _features_matrix(features: pa.Array, features_col: str) -> np.ndarray:
     if features.null_count:
         raise ValueError(
             f"features column '{features_col}' has {features.null_count} null "
-            "row(s); every row to score needs a feature vector"
+            "row(s); every row needs a feature vector"
         )
     b = len(features)
     lengths = np.diff(features.offsets.to_numpy())
@@ -125,13 +139,13 @@ def make_score_udf(bc, psi: float, features_col: str):
     (IForest.scala:90); IForestModel reuses one per application. The
     closure holds only the broadcast handle, so tasks do not also carry the
     forest. ``features_col`` names the input column in the errors raised
-    for null or uneven rows.
+    for null, uneven or too narrow rows.
     """
     from pyspark.sql.functions import arrow_udf
 
     @arrow_udf("double")
     def score_udf(features: pa.Array) -> pa.Array:
         x = _features_matrix(features, features_col)
-        return pa.array(anomaly_scores(bc.value, x, psi))
+        return pa.array(anomaly_scores(bc.value, x, psi, features_col))
 
     return score_udf

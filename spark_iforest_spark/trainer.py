@@ -1,4 +1,5 @@
-"""Isolation-tree induction (runs inside applyInPandas, one task per tree).
+"""Isolation-tree induction (runs inside ``mapInArrow`` tasks, a share of
+the trees per task).
 
 Reproduces the reference's iTree semantics (IForest.scala:558-656):
 
@@ -23,7 +24,7 @@ import math
 
 import numpy as np
 
-from spark_iforest_spark.nodes import Tree, TreeBuilder
+from spark_iforest_spark.nodes import Tree, TreeBuilder, tree_to_batch
 
 
 def num_sub_features(max_features: float, d: int) -> int:
@@ -107,3 +108,24 @@ def train_tree(
     sub, feature_idx = sample_features(x, max_features, rng)
     cap = depth_cap(max_depth_param, len(x))
     return build_itree(sub, cap, rng, feature_idx)
+
+
+def make_build_fn(bc, max_depth_param: int, max_features: float, seed: int):
+    """Build a ``mapInArrow`` function from batches of tree ids to one
+    ``FLAT_NODE_SCHEMA`` batch per tree.
+
+    ``bc`` is a broadcast of ``(pool, plan)``: the hash-ordered pool as an
+    (m, d) float64 matrix, and per tree the pool rows it trains on as a
+    (numTrees, psi) index matrix (a row index repeats once per bootstrap
+    copy), or None when every tree trains on the whole pool.
+    """
+
+    def build(batches):
+        pool, plan = bc.value
+        for batch in batches:
+            for tree_id in batch.column(0).to_pylist():
+                x = pool if plan is None else pool[plan[tree_id]]
+                tree = train_tree(x, max_depth_param, max_features, seed, tree_id)
+                yield tree_to_batch(tree_id, tree)
+
+    return build

@@ -119,6 +119,91 @@ def test_transform_rejects_bad_feature_rows(spark, bad_row, message):
         model.transform(df.coalesce(1)).collect()
 
 
+@pytest.mark.parametrize("bad_row", [None, [1.0]], ids=["null", "uneven"])
+def test_fit_rejects_bad_feature_rows(spark, bad_row):
+    # the sampled pool is read on the driver, so a bad row in it fails the
+    # fit there with the same error transform gives
+    df = spark.createDataFrame(
+        [([float(i), float(-i)],) for i in range(20)] + [(bad_row,)], "features array<double>"
+    )
+    with pytest.raises(ValueError, match="features column 'features'"):
+        IForest(numTrees=5, maxSamples=8.0, seed=1).fit(df)
+
+
+def test_transform_rejects_rows_narrower_than_the_splits(spark):
+    train = spark.createDataFrame(
+        [([float(i), float(-i), float(i % 5)],) for i in range(40)], "vec array<double>"
+    )
+    model = IForest(featuresCol="vec", numTrees=10, seed=1).fit(train)
+    width = max(int(t.feature_index.max()) for t in model.trees) + 1
+    assert width > 1
+    df = spark.createDataFrame([([1.0] * (width - 1),)], "vec array<double>")
+    with pytest.raises(
+        Exception, match=f"features column 'vec' has rows of width {width - 1}.* at least {width}"
+    ):
+        model.transform(df).collect()
+
+
+def _replay_fit(df, num_trees, max_samples, bootstrap, seed, max_depth, max_features):
+    """The documented sampling plan, replayed without IForest._fit: a
+    Bernoulli pool at u = pmod(xxhash64, 2^30) / 2^30 < pool fraction,
+    ordered by the full hash, then per tree the seeded rng draws and
+    train_tree."""
+    from pyspark.sql import functions as F
+
+    from spark_iforest_spark.iforest import _POOL_OVERSAMPLE, _POOL_SLACK
+    from spark_iforest_spark.trainer import train_tree
+
+    rows = df.select("features", F.xxhash64("features", F.lit(seed)).alias("h")).collect()
+    n = len(rows)
+    fraction = max_samples / n if max_samples > 1 else max_samples
+    psi = max(int(fraction * n), 1)
+    pool_fraction = min(1.0, (int(_POOL_OVERSAMPLE * num_trees * psi) + _POOL_SLACK) / n)
+    pool = [
+        r for r in rows
+        if pool_fraction >= 1.0 or (r["h"] % (1 << 30)) / (1 << 30) < pool_fraction
+    ]
+    if len(pool) < psi:
+        pool = rows
+    x = np.array([r["features"] for r in sorted(pool, key=lambda r: r["h"])])
+    rng = np.random.default_rng(seed & 0x7FFFFFFF)
+    trees = []
+    for t in range(num_trees):
+        if fraction >= 1.0 and not bootstrap:
+            sample = x
+        elif bootstrap:
+            sample = x[rng.integers(0, len(x), size=psi)]
+        else:
+            sample = x[rng.choice(len(x), size=psi, replace=False)]
+        trees.append(train_tree(sample, max_depth, max_features, seed, t))
+    return trees, pool_fraction
+
+
+@pytest.mark.parametrize(
+    "n, params",
+    [
+        (2000, dict(numTrees=6, maxSamples=16.0, seed=21)),
+        (2000, dict(numTrees=6, maxSamples=16.0, bootstrap=True, seed=22)),
+        (2000, dict(numTrees=4, maxSamples=0.05, maxFeatures=0.5, seed=23)),
+        (150, dict(numTrees=3, maxSamples=1.0, seed=24)),
+    ],
+    ids=["absolute", "bootstrap", "fraction", "all_rows"],
+)
+def test_fit_matches_documented_sampling_plan(spark, n, params):
+    rng = np.random.default_rng(params["seed"])
+    df = spark.createDataFrame(
+        [(r.tolist(),) for r in rng.normal(size=(n, 3))], "features array<double>"
+    )
+    est = IForest(**params)
+    model = est.fit(df.repartition(5))
+    expected, pool_fraction = _replay_fit(
+        df, est.getNumTrees(), est.getMaxSamples(), est.getBootstrap(),
+        est.getSeed(), est.getMaxDepth(), est.getMaxFeatures(),
+    )
+    assert pool_fraction < 1.0 or params["maxSamples"] == 1.0
+    assert model.trees == expected
+
+
 def test_maxsamples_gt_rows_fails(spark):
     # IForestSuite.scala:202-224 boundary: maxSamples > totalRows fails at fit
     df = iforest_data(spark, 10, 2)

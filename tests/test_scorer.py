@@ -108,6 +108,40 @@ def test_deeper_rows_score_lower():
     assert scores[0] > scores[1]
 
 
+def test_anomaly_scores_rejects_rows_narrower_than_the_splits():
+    # the tree splits on feature 2, so rows need at least 3 columns; wider
+    # rows are scored on their first columns (no training width is kept)
+    tree = make_tree([(2, 0.5, 1, 2, 0), (-1, -1.0, -1, -1, 1), (-1, -1.0, -1, -1, 3)])
+    forest = pack_forest([tree])
+    x = np.array([[0.0, 0.0, 0.0], [0.0, 0.0, 0.9]])
+    with pytest.raises(ValueError, match="features column 'vec' has rows of width 2.* at least 3"):
+        anomaly_scores(forest, x[:, :2], 16.0, "vec")
+    wide = np.hstack([x, np.full((2, 4), 7.0)])
+    assert np.array_equal(anomaly_scores(forest, wide, 16.0), anomaly_scores(forest, x, 16.0))
+    assert anomaly_scores(forest, x[:0, :0], 16.0).shape == (0,)
+
+
+def test_worker_modules_do_not_import_pyspark_ml():
+    # Python workers import these to unpickle the scoring and training
+    # closures; the package must not drag pyspark.ml in with them
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import sys, spark_iforest_spark.scorer, spark_iforest_spark.trainer; "
+        "print(sorted(m for m in sys.modules if m.startswith('pyspark.ml')))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert out.stdout.strip() == "[]"
+
+
 def test_exact_threshold_orderstat_matches_approx_quantile(spark):
     """The order-statistic threshold plan must return EXACTLY Spark's
     approxQuantile(relErr=0) value: rank = ceil(q*n) ascending, threshold =
