@@ -4,11 +4,14 @@ Capability-parity rebuild of the reference Scala implementation
 (/root/reference/src/main/scala/org/apache/spark/ml/iforest/IForest.scala)
 with an idiomatic-Spark execution plan:
 
-* training: a hash-based Bernoulli candidate pool, collected to the driver
-  with one ``toArrow`` and ordered there by hash → driver-side per-tree
-  index plan → pool and plan broadcast once → ``mapInArrow`` over the tree
-  ids trains a share of the trees in each task (model-wise parallelism,
-  same as reference IForest.scala:324-330) → collect the flat node table
+* training: a hash-based Bernoulli candidate pool → driver-side per-tree
+  index plan → trees built model-wise in parallel (same as reference
+  IForest.scala:324-330) → collect the flat node table. A pool small
+  enough to collect goes to the driver with one ``toArrow``, is ordered
+  there by hash and broadcast with the plan, and ``mapInArrow`` over the
+  tree ids trains a share of the trees per task. A larger pool stays on
+  the executors: hash-ordered row ids, a broadcast join with the plan and
+  one shuffle keyed by treeId into a grouped ``applyInArrow`` build.
 * scoring: one ``arrow_udf`` (numpy per-tree level-synchronous descent)
   — replaces the reference's per-row boxed-Vector UDF, its
   published bottleneck
@@ -24,14 +27,16 @@ maxSamples) rows regardless of input size — one Bernoulli-filtered scan
 sorted on the driver and broadcast; no shuffle. Scoring is embarrassingly
 data-parallel with the forest broadcast once per executor. With
 maxSamples <= 1 (a *fraction* of the input) the reference semantics make
-the pool min(n, ~1.1*numTrees*fraction*n) rows, all of which must fit in
-driver memory (the 256M warning counts them) — inherently unscalable for
-large fractions; we preserve the semantics and document the cliff.
+the pool min(n, ~1.1*numTrees*fraction*n) rows; past
+``_POOL_COLLECT_MAX_BYTES`` it stays on the executors and numTrees*psi rows
+converge on numTrees tasks — inherently unscalable for large fractions; we
+preserve the semantics and document the cliff.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.ml import Estimator, Model
 from pyspark.ml.param import Params
 from pyspark.ml.util import (
@@ -46,6 +51,9 @@ from pyspark.ml.util import (
 )
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, NumericType
+from pyspark.sql.window import Window
+
+from spark_iforest_spark.checkpoint import snapshot
 
 from spark_iforest_spark.nodes import (
     FLAT_NODE_SCHEMA,
@@ -58,10 +66,18 @@ from spark_iforest_spark.nodes import (
 )
 from spark_iforest_spark.params import IForestParams
 from spark_iforest_spark.scorer import _features_matrix, make_score_udf
-from spark_iforest_spark.trainer import make_build_fn
+from spark_iforest_spark.trainer import make_build_fn, make_group_build_fn
 
 _POOL_OVERSAMPLE = 1.1
 _POOL_SLACK = 1024
+# a pool plus plan estimated above this many bytes stays on the executors
+# instead of being collected (Spark's default spark.driver.maxResultSize
+# is 1 GiB)
+_POOL_COLLECT_MAX_BYTES = 128 << 20
+# above this pool size, executor-side rid assignment switches from one
+# global sort to partition-local row numbers + driver offsets (distributed
+# zipWithIndex)
+_POOL_GLOBAL_SORT_MAX = 20_000_000
 
 
 def _features_as_array(df: DataFrame, features_col: str) -> F.Column:
@@ -178,12 +194,19 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
         psi = int(fraction * n)  # possibleMaxSamples, IForest.scala:412
         psi = max(psi, 1)
 
-        pool, plan = self._sample_assign(feats, n, psi, num_trees, features_col)
+        # Size the pool and plan before anything reaches the driver: about
+        # min(n, target_pool) rows of one row's width in doubles plus the
+        # hash, and numTrees x psi int64 row indices.
+        target_pool = int(_POOL_OVERSAMPLE * num_trees * psi) + _POOL_SLACK
+        width = feats.select(F.size("features").alias("d")).head()["d"] or 0
+        pool_bytes = min(n, target_pool) * 8 * (max(width, 0) + 1)
+        plan_bytes = 0 if psi == n and not self.getBootstrap() else num_trees * psi * 8
+        collect = pool_bytes + plan_bytes <= _POOL_COLLECT_MAX_BYTES
 
         # driver-memory guard: the arithmetic of IForest.scala:507-511 plus
-        # the collected pool
-        usage_mb = (num_trees * 2 * psi * 32 + pool.nbytes) / (1024 * 1024)
-        if usage_mb > 256:
+        # the plan, and the pool when it is collected
+        driver_bytes = num_trees * 2 * psi * 32 + plan_bytes + (pool_bytes if collect else 0)
+        if driver_bytes > 256 * 1024 * 1024:
             import warnings
 
             warnings.warn(
@@ -192,21 +215,60 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
                 "numTrees or maxSamples."
             )
 
-        # Model-wise parallel build (reference IForest.scala:324-330): the
-        # pool and plan ship once as a broadcast, each task of a tree-id
-        # range trains its share of the trees and returns their node arrays
-        # as Arrow batches. No shuffle, so AQE cannot coalesce the build
-        # into one task.
-        bc = sc.broadcast((pool, plan))
-        try:
-            build = make_build_fn(bc, self.getMaxDepth(), self.getMaxFeatures(), seed)
+        pool, plan = self._sample_assign(feats, n, psi, num_trees, target_pool, collect)
+        max_depth, max_features = self.getMaxDepth(), self.getMaxFeatures()
+        if collect:
+            # Model-wise parallel build (reference IForest.scala:324-330):
+            # the pool and plan ship once as a broadcast, each task of a
+            # tree-id range trains its share of the trees and returns their
+            # node arrays as Arrow batches. No shuffle, so AQE cannot
+            # coalesce the build into one task.
+            bc = sc.broadcast((pool, plan))
+            del pool, plan
+            try:
+                build = make_build_fn(bc, max_depth, max_features, seed)
+                nodes = (
+                    spark.range(num_trees, numPartitions=min(num_trees, sc.defaultParallelism))
+                    .mapInArrow(build, FLAT_NODE_SCHEMA)
+                    .toArrow()
+                )
+            finally:
+                bc.destroy()
+        else:
+            if plan is None:
+                # every tree trains on all rows (reference reservoir k=n of
+                # n): broadcast-cross-join the tree-id table
+                tree_ids = spark.range(num_trees).select(F.col("id").cast("int").alias("treeId"))
+                joined = pool.crossJoin(F.broadcast(tree_ids))
+            else:
+                # one (rid, treeId) row per draw: a bootstrap copy repeats
+                # its row, so the join emits the pool row once per copy
+                assign = spark.createDataFrame(
+                    pd.DataFrame(
+                        {
+                            "rid": plan.ravel(),
+                            "treeId": np.repeat(np.arange(num_trees, dtype=np.int32), psi),
+                        }
+                    ),
+                    schema="rid long, treeId int",
+                )
+                joined = pool.join(F.broadcast(assign), "rid")
+            del plan
+            # A user-specified partition count is exempt from AQE
+            # coalescing, so the tree builds stay spread over
+            # min(numTrees, shuffle partitions) tasks.
+            from spark_iforest_spark.functions import shuffle_partitions
+
             nodes = (
-                spark.range(num_trees, numPartitions=min(num_trees, sc.defaultParallelism))
-                .mapInArrow(build, FLAT_NODE_SCHEMA)
+                joined.select("treeId", "features")
+                .repartition(min(num_trees, shuffle_partitions(spark)), "treeId")
+                .groupBy("treeId")
+                .applyInArrow(
+                    make_group_build_fn(max_depth, max_features, seed, features_col),
+                    FLAT_NODE_SCHEMA,
+                )
                 .toArrow()
             )
-        finally:
-            bc.destroy()
         trees = pandas_to_forest(nodes)
         if len(trees) != num_trees:
             raise RuntimeError(f"expected {num_trees} trees, built {len(trees)}")
@@ -237,24 +299,27 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
         n: int,
         psi: int,
         num_trees: int,
-        features_col: str,
-    ) -> tuple[np.ndarray, np.ndarray | None]:
+        target_pool: int,
+        collect: bool,
+    ) -> tuple[np.ndarray | DataFrame, np.ndarray | None]:
         """Per-tree samples as a candidate pool plus a driver-side plan.
 
         Uniform k-of-n sampling composes: a Bernoulli-sampled pool of the
         input is a uniform subset, and a uniform psi-of-pool draw is then a
-        uniform psi-of-n draw. This keeps what reaches the driver at
-        O(numTrees * psi) rows no matter how large the input is, instead of
-        zipWithIndex-ing the whole dataset like the reference
-        (IForest.scala:471-483). The pool is collected with one
-        ``toArrow`` and ordered by the 64-bit hash of each feature vector,
-        so the plan is deterministic for a given (data, seed) regardless
-        of partition layout.
+        uniform psi-of-n draw. This keeps the pool at O(numTrees * psi)
+        rows no matter how large the input is, instead of zipWithIndex-ing
+        the whole dataset like the reference (IForest.scala:471-483). Pool
+        rows are indexed in the order of the 64-bit hash of each feature
+        vector, so the plan is deterministic for a given (data, seed)
+        regardless of partition layout (up to _POOL_GLOBAL_SORT_MAX rows).
 
-        Returns ``(pool, plan)``: the (m, d) pool matrix in hash order, and
-        the (numTrees, psi) pool row indices each tree trains on, or None
-        when every tree trains on the whole input (psi == n without
-        bootstrap, the reference's reservoir k=n of n).
+        Returns ``(pool, plan)``. With ``collect`` the pool is collected
+        with one ``toArrow`` and returned as the (m, d) matrix in hash
+        order; otherwise it stays a DataFrame of ``features`` and row id
+        ``rid``. ``plan`` is the (numTrees, psi) pool row indices each tree
+        trains on, or None when every tree trains on the whole input (psi
+        == n without bootstrap, the reference's reservoir k=n of n). Both
+        pool forms give the same plan, hence the same forest.
 
         For bootstrap, draws-with-replacement from the pool only
         approximate draws-with-replacement from the full input (duplicate
@@ -269,37 +334,94 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
         ensemble. AUC parity is pinned in test_reference_parity.
         """
         seed = self.getSeed()
-        target_pool = int(_POOL_OVERSAMPLE * num_trees * psi) + _POOL_SLACK
+        bootstrap = self.getBootstrap()
+        every_row = psi == n and not bootstrap
+        if every_row and not collect:
+            return feats, None
         pool_fraction = min(1.0, target_pool / n)
 
         # u (30-bit hash scaled to [0,1)) drives the Bernoulli pool filter;
         # the pool ORDER uses the full 64-bit hash — 30 bits collide between
         # distinct vectors at pool sizes >~ 2^15. Full-64-bit ties happen
         # only for identical feature vectors, which are interchangeable for
-        # training, so the stable sort's tie order does not matter.
+        # training, so the tie order does not matter.
         denom = 1 << 30
         h = F.xxhash64(F.col("features"), F.lit(seed))
         pool = feats.select("features", h.alias("h"))
         if pool_fraction < 1.0:
             pool = pool.where(F.pmod(h, F.lit(denom)) / denom < pool_fraction)
-        table = pool.toArrow()
-        if table.num_rows < psi:
-            # Bernoulli undershoot (possible only on tiny inputs): use all rows
-            table = feats.select("features", h.alias("h")).toArrow()
-        order = np.argsort(table["h"].to_numpy(), kind="stable")
-        x = _features_matrix(table["features"].combine_chunks(), features_col)[order]
-        m = len(x)
+        if collect:
+            table = pool.toArrow()
+            if table.num_rows < psi:
+                # Bernoulli undershoot (possible only on tiny inputs): use all rows
+                table = feats.select("features", h.alias("h")).toArrow()
+            order = np.argsort(table["h"].to_numpy(), kind="stable")
+            pool = _features_matrix(
+                table["features"].combine_chunks(), self.getFeaturesCol()
+            )[order]
+            m = len(pool)
+        else:
+            pool, m = self._pool_row_ids(pool, target_pool)
+            if m < psi:
+                pool = feats.select(
+                    "features", (F.row_number().over(Window.orderBy(h)) - F.lit(1)).alias("rid")
+                )
+                m = n
+        if every_row:
+            return pool, None
 
         # Driver-side sampling plan (reference O2-O4, IForest.scala:414-462).
-        bootstrap = self.getBootstrap()
-        if psi == n and not bootstrap:
-            return x, None
         rng = np.random.default_rng(seed & 0x7FFFFFFF)
         draws = [
             rng.integers(0, m, size=psi) if bootstrap else rng.choice(m, size=psi, replace=False)
             for _ in range(num_trees)
         ]
-        return x, np.stack(draws)
+        return pool, np.stack(draws)
+
+    @staticmethod
+    def _pool_row_ids(pool: DataFrame, target_pool: int) -> tuple[DataFrame, int]:
+        """Number an executor-side pool 0..m-1 in hash order; returns the
+        pool with a ``rid`` column and m.
+
+        The pool is localCheckpoint'd, not cache()d: same one-pass
+        materialization, but the lineage truncation freezes the partition
+        layout (no silent recompute after cache eviction) and Spark's
+        ContextCleaner reclaims the blocks once the fit drops its
+        reference. TRADEOFF: localCheckpoint blocks are NOT fault-tolerant
+        — losing an executor mid-fit fails the job instead of recomputing
+        as cache() would. For clusters where executor loss is routine, set
+        spark.spark_iforest.reliableCheckpoint=true + a checkpoint dir
+        (checkpoint.snapshot) at the cost of a distributed-FS round-trip.
+        """
+        if target_pool <= _POOL_GLOBAL_SORT_MAX:
+            # one single-task sort; rids (hence the whole forest) are
+            # independent of partition layout and equal the collected
+            # pool's hash order
+            pool = snapshot(
+                pool.withColumn("rid", F.row_number().over(Window.orderBy("h")) - F.lit(1)),
+                eager=False,
+            )
+            return pool, pool.count()
+        # fractional-maxSamples regime at large n: psi scales with the
+        # input, a global sort would bottleneck — partition-local
+        # row_numbers + driver-computed partition offsets. rids then depend
+        # on the partition layout; the sampling DISTRIBUTION is unchanged,
+        # only bitwise run-to-run reproducibility narrows to fixed layouts.
+        part_pool = snapshot(pool.withColumn("part", F.spark_partition_id()), eager=False)
+        counts = {
+            r["part"]: r["cnt"]
+            for r in part_pool.groupBy("part").agg(F.count(F.lit(1)).alias("cnt")).collect()
+        }
+        offsets, acc = {}, 0
+        for p in sorted(counts):
+            offsets[p] = acc
+            acc += counts[p]
+        offset_col = F.element_at(
+            F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]), F.col("part")
+        )
+        w = Window.partitionBy("part").orderBy(F.col("h"))
+        pool = part_pool.withColumn("rid", F.row_number().over(w) - F.lit(1) + offset_col)
+        return pool.drop("part"), acc
 
     # Params.copy default (shallow copy + param re-copy) is sufficient.
 

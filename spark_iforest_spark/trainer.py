@@ -1,5 +1,6 @@
 """Isolation-tree induction (runs inside ``mapInArrow`` tasks, a share of
-the trees per task).
+the trees per task, or one grouped ``applyInArrow`` call per tree when the
+sample pool is too large to collect).
 
 Reproduces the reference's iTree semantics (IForest.scala:558-656):
 
@@ -23,8 +24,10 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pyarrow as pa
 
 from spark_iforest_spark.nodes import Tree, TreeBuilder, tree_to_batch
+from spark_iforest_spark.scorer import _features_matrix
 
 
 def num_sub_features(max_features: float, d: int) -> int:
@@ -127,5 +130,20 @@ def make_build_fn(bc, max_depth_param: int, max_features: float, seed: int):
                 x = pool if plan is None else pool[plan[tree_id]]
                 tree = train_tree(x, max_depth_param, max_features, seed, tree_id)
                 yield tree_to_batch(tree_id, tree)
+
+    return build
+
+
+def make_group_build_fn(max_depth_param: int, max_features: float, seed: int, features_col: str):
+    """Build a grouped ``applyInArrow`` function from one tree's sample
+    rows (columns ``treeId`` and ``features``) to that tree's
+    ``FLAT_NODE_SCHEMA`` table. ``features_col`` names the input column in
+    the errors raised for null or uneven rows."""
+
+    def build(table: pa.Table) -> pa.Table:
+        tree_id = table.column("treeId")[0].as_py()
+        x = _features_matrix(table.column("features").combine_chunks(), features_col)
+        tree = train_tree(x, max_depth_param, max_features, seed, tree_id)
+        return pa.Table.from_batches([tree_to_batch(tree_id, tree)])
 
     return build

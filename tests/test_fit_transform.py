@@ -189,7 +189,12 @@ def _replay_fit(df, num_trees, max_samples, bootstrap, seed, max_depth, max_feat
     ],
     ids=["absolute", "bootstrap", "fraction", "all_rows"],
 )
-def test_fit_matches_documented_sampling_plan(spark, n, params):
+@pytest.mark.parametrize("pool_on", ["driver", "executors"])
+def test_fit_matches_documented_sampling_plan(spark, monkeypatch, n, params, pool_on):
+    # both homes of the pool (collected, or numbered on the executors and
+    # joined with the plan) must give the same forest
+    if pool_on == "executors":
+        monkeypatch.setattr("spark_iforest_spark.iforest._POOL_COLLECT_MAX_BYTES", 0)
     rng = np.random.default_rng(params["seed"])
     df = spark.createDataFrame(
         [(r.tolist(),) for r in rng.normal(size=(n, 3))], "features array<double>"
@@ -202,6 +207,56 @@ def test_fit_matches_documented_sampling_plan(spark, n, params):
     )
     assert pool_fraction < 1.0 or params["maxSamples"] == 1.0
     assert model.trees == expected
+
+
+def _spy_builds(monkeypatch):
+    from spark_iforest_spark import iforest
+
+    used = []
+    for name in ("make_build_fn", "make_group_build_fn"):
+        real = getattr(iforest, name)
+        monkeypatch.setattr(
+            iforest, name, lambda *a, _real=real, _name=name: used.append(_name) or _real(*a)
+        )
+    return used
+
+
+def test_pool_home_follows_its_estimated_size(spark, monkeypatch):
+    # pool estimate: min(n, 1.1*6*16 + 1024) rows * 8 B * (d + 1 hash) plus
+    # the plan's 6*16 int64 indices; at the limit it is collected, one byte
+    # over it stays on the executors
+    from spark_iforest_spark import iforest
+
+    df = spark.createDataFrame(
+        [([float(i), float(-i), float(i % 7)],) for i in range(2000)], "features array<double>"
+    )
+    estimate = (int(1.1 * 6 * 16) + 1024) * 8 * 4 + 6 * 16 * 8
+    used = _spy_builds(monkeypatch)
+    models = []
+    for limit in (estimate, estimate - 1):
+        monkeypatch.setattr(iforest, "_POOL_COLLECT_MAX_BYTES", limit)
+        models.append(IForest(numTrees=6, maxSamples=16.0, seed=3).fit(df))
+    assert used == ["make_build_fn", "make_group_build_fn"]
+    assert models[0].trees == models[1].trees
+
+
+def test_executor_pool_partition_offset_ids(spark, monkeypatch):
+    # above _POOL_GLOBAL_SORT_MAX rows the executor-side pool is numbered by
+    # partition-local row numbers plus driver offsets instead of one sort:
+    # every tree still trains on psi distinct rows, and a fixed layout
+    # gives a fixed forest
+    from spark_iforest_spark import iforest
+
+    monkeypatch.setattr(iforest, "_POOL_COLLECT_MAX_BYTES", 0)
+    monkeypatch.setattr(iforest, "_POOL_GLOBAL_SORT_MAX", 0)
+    rng = np.random.default_rng(5)
+    df = spark.createDataFrame(
+        [(r.tolist(),) for r in rng.normal(size=(3000, 3))], "features array<double>"
+    ).repartition(4)
+    est = IForest(numTrees=5, maxSamples=32.0, seed=9)
+    model = est.fit(df)
+    assert [int(t.num_instance.sum()) for t in model.trees] == [32] * 5
+    assert est.fit(df).trees == model.trees
 
 
 def test_maxsamples_gt_rows_fails(spark):
