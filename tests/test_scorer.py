@@ -121,6 +121,27 @@ def test_anomaly_scores_rejects_rows_narrower_than_the_splits():
     assert anomaly_scores(forest, x[:0, :0], 16.0).shape == (0,)
 
 
+def test_worker_modules_do_not_import_pyspark_ml():
+    # Python workers import these to unpickle the scoring and training
+    # closures; the package must not drag pyspark.ml in with them
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import sys, spark_iforest_spark.scorer, spark_iforest_spark.trainer; "
+        "print(sorted(m for m in sys.modules if m.startswith('pyspark.ml')))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert out.stdout.strip() == "[]"
+
+
 def test_exact_threshold_orderstat_matches_approx_quantile(spark):
     """The order-statistic threshold plan must return EXACTLY Spark's
     approxQuantile(relErr=0) value: rank = ceil(q*n) ascending, threshold =
