@@ -35,8 +35,11 @@ preserve the semantics and document the cliff.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.ml import Estimator, Model
 from pyspark.ml.param import Params
 from pyspark.ml.util import (
@@ -61,8 +64,8 @@ from spark_iforest_spark.nodes import (
     Tree,
     pack_forest,
     pandas_to_forest,
-    rows_to_forest,
-    tree_to_rows,
+    rows_to_forest,  # unused here: perfbench/tracing.py wraps iforest.rows_to_forest
+    tree_to_batch,
 )
 from spark_iforest_spark.params import IForestParams
 from spark_iforest_spark.scorer import _features_matrix, make_score_udf
@@ -274,6 +277,7 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
             raise RuntimeError(f"expected {num_trees} trees, built {len(trees)}")
 
         model = IForestModel(trees=trees)
+        model._num_features = width
         model._resetUid(self.uid + "_model")
         self._copyValues(model)
         model._set_parent_estimator(self)
@@ -433,12 +437,18 @@ class IForestModel(Model, IForestParams, MLWritable, MLReadable):
     (IForest.scala:49-75): −1 until the first transform computes it from
     ``contamination`` via approxQuantile; NOT persisted — a loaded model
     recomputes it on first transform (IForest.scala:283-296).
+
+    Non-Param ``_num_features`` is the training row width, set by fit and
+    persisted as ``numFeatures``; transform rejects rows of another width.
+    It is None for a model written without it (by the reference or an
+    older version), which rejects only rows too narrow for its splits.
     """
 
     def __init__(self, trees: list[Tree] | None = None):
         super().__init__()
         self._set_default_params()
         self._trees: list[Tree] = trees or []
+        self._num_features: int | None = None
         self._packed: PackedForest | None = None
         self._forest_bc = None
         self._forest_bc_app: str | None = None
@@ -478,7 +488,7 @@ class IForestModel(Model, IForestParams, MLWritable, MLReadable):
         if self._packed is None:
             if not self._trees:
                 raise RuntimeError("model has no trees")
-            self._packed = pack_forest(self._trees)
+            self._packed = replace(pack_forest(self._trees), width=self._num_features)
         return self._packed
 
     def _forest_broadcast(self, spark):
@@ -589,6 +599,7 @@ class IForestModel(Model, IForestParams, MLWritable, MLReadable):
         that = IForestModel(trees=self._trees)
         that._resetUid(self.uid)
         self._copyValues(that, extra)
+        that._num_features = self._num_features
         that._threshold = self._threshold
         that._summary = self._summary
         return that
@@ -612,7 +623,8 @@ class IForestModel(Model, IForestParams, MLWritable, MLReadable):
 class IForestModelWriter(MLWriter):
     """Writes metadata JSON + pre-order NodeData parquet — the same on-disk
     layout as the reference (IForest.scala:283-296): ``path/metadata`` and
-    ``path/data`` with nested EnsembleNodeData rows."""
+    ``path/data`` with nested EnsembleNodeData rows. The metadata also
+    carries ``numFeatures``, the training width, when the model knows it."""
 
     def __init__(self, instance: IForestModel):
         super().__init__()
@@ -620,17 +632,14 @@ class IForestModelWriter(MLWriter):
 
     def saveImpl(self, path: str) -> None:
         model = self.instance
-        DefaultParamsWriter.saveMetadata(model, path, self.sc)
-        rows = []
-        for tree_id, tree in enumerate(model.trees):
-            for (tid, nid, fi, fv, lc, rc, ni) in tree_to_rows(tree_id, tree):
-                rows.append((tid, (nid, fi, fv, lc, rc, ni)))
-        spark = self.sparkSession
-        schema = (
-            "treeID INT, nodeData STRUCT<id: INT, featureIndex: INT, "
-            "featureValue: DOUBLE, leftChild: INT, rightChild: INT, numInstance: BIGINT>"
-        )
-        spark.createDataFrame(rows, schema=schema).write.parquet(path + "/data")
+        extra = None if model._num_features is None else {"numFeatures": model._num_features}
+        DefaultParamsWriter.saveMetadata(model, path, self.sc, extraMetadata=extra)
+        nodes = pa.Table.from_batches([tree_to_batch(t, tree) for t, tree in enumerate(model.trees)])
+        # the reference layout: treeID, then the other node columns nested
+        # in a nullable nodeData struct
+        nested = nodes.drop_columns("treeID").to_struct_array()
+        data = pa.table({"treeID": nodes["treeID"], "nodeData": nested})
+        self.sparkSession.createDataFrame(data).write.parquet(path + "/data")
 
 
 class IForestModelReader(MLReader):
@@ -639,20 +648,9 @@ class IForestModelReader(MLReader):
         class_name = metadata["class"]
         if "IForestModel" not in class_name:
             raise ValueError(f"expected IForestModel metadata, found class {class_name}")
-        df = self.sparkSession.read.parquet(path + "/data")
-        rows = [
-            {
-                "treeID": r["treeID"],
-                "id": r["nodeData"]["id"],
-                "featureIndex": r["nodeData"]["featureIndex"],
-                "featureValue": r["nodeData"]["featureValue"],
-                "leftChild": r["nodeData"]["leftChild"],
-                "rightChild": r["nodeData"]["rightChild"],
-                "numInstance": r["nodeData"]["numInstance"],
-            }
-            for r in df.collect()
-        ]
-        model = IForestModel(trees=rows_to_forest(rows))
+        nodes = self.sparkSession.read.parquet(path + "/data").select("treeID", "nodeData.*")
+        model = IForestModel(trees=pandas_to_forest(nodes.toArrow()))
+        model._num_features = metadata.get("numFeatures")
         model._resetUid(metadata["uid"])
         DefaultParamsReader.getAndSetParams(model, metadata)
         return model

@@ -14,6 +14,11 @@ Encoding (one ``Tree`` = parallel numpy arrays indexed by pre-order node id):
 
 Matches the reference's persisted ``NodeData`` sentinel conventions
 (IForest.scala:189-196) so a model round-trips bit-identically.
+
+One columnar codec moves the node table everywhere: ``tree_to_batch``
+encodes a tree as a ``FLAT_NODE_SCHEMA`` Arrow batch (training wire, model
+save, segmented fit) and ``pandas_to_forest`` decodes such a table (fit,
+model load, segmented scoring), checking the load invariants once.
 """
 
 from __future__ import annotations
@@ -23,16 +28,10 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 
-# Parquet schema of one persisted node row (reference EnsembleNodeData,
-# IForest.scala:189-196,225-228: nested struct {treeID, nodeData{...}}).
-NODE_DATA_SCHEMA = (
-    "treeID INT NOT NULL, "
-    "nodeData STRUCT<id: INT, featureIndex: INT, featureValue: DOUBLE, "
-    "leftChild: INT, rightChild: INT, numInstance: BIGINT> NOT NULL"
-)
-
-# Flat variant used on the mapInArrow wire during training (cheaper than
-# a nested struct through Arrow; nested only at the persistence boundary).
+# The node table: one row per node. Flat on the Arrow wire; the model
+# writer nests every column after treeID into the reference's nodeData
+# struct at the persistence boundary (EnsembleNodeData,
+# IForest.scala:189-196,225-228).
 FLAT_NODE_SCHEMA = (
     "treeID INT, id INT, featureIndex INT, featureValue DOUBLE, "
     "leftChild INT, rightChild INT, numInstance BIGINT"
@@ -111,7 +110,10 @@ class TreeBuilder:
 
 def tree_to_rows(tree_id: int, tree: Tree) -> list[tuple]:
     """Flatten one tree to (treeID, id, featureIndex, featureValue, leftChild,
-    rightChild, numInstance) rows. Node ids are already pre-order."""
+    rightChild, numInstance) tuples. Node ids are already pre-order.
+
+    The package encodes with ``tree_to_batch``; this per-node form is kept
+    for the benchmark's codec probe."""
     return [
         (
             int(tree_id),
@@ -142,80 +144,62 @@ def tree_to_batch(tree_id: int, tree: Tree) -> pa.RecordBatch:
 
 
 def rows_to_forest(rows) -> list[Tree]:
-    """Rebuild a forest from flat node rows.
+    """``pandas_to_forest`` over an iterable of node-row dicts (the
+    ``FLAT_NODE_SCHEMA`` fields)."""
+    import pandas as pd
 
-    Accepts any iterable of objects with attributes/keys
-    (treeID, id, featureIndex, featureValue, leftChild, rightChild,
-    numInstance). Enforces the reference's load invariants
-    (IForest.scala:259-281): ids are dense 0..n-1 per tree, root is node 0,
-    forest ordered by treeID.
-    """
-    by_tree: dict[int, list] = {}
-    for r in rows:
-        by_tree.setdefault(int(r["treeID"] if isinstance(r, dict) else r.treeID), []).append(r)
-
-    def field(r, name):
-        return r[name] if isinstance(r, dict) else getattr(r, name)
-
-    forest: list[Tree] = []
-    expected = list(range(len(by_tree)))
-    if sorted(by_tree) != expected:
-        raise ValueError(f"tree ids must be dense 0..{len(by_tree) - 1}, got {sorted(by_tree)}")
-    for tid in expected:
-        nodes = sorted(by_tree[tid], key=lambda r: field(r, "id"))
-        n = len(nodes)
-        ids = [field(r, "id") for r in nodes]
-        if ids != list(range(n)):
-            raise ValueError(f"tree {tid}: node ids must be dense 0..{n - 1}")
-        forest.append(
-            Tree(
-                feature_index=np.asarray([field(r, "featureIndex") for r in nodes], dtype=np.int32),
-                feature_value=np.asarray([field(r, "featureValue") for r in nodes], dtype=np.float64),
-                left=np.asarray([field(r, "leftChild") for r in nodes], dtype=np.int32),
-                right=np.asarray([field(r, "rightChild") for r in nodes], dtype=np.int32),
-                num_instance=np.asarray([field(r, "numInstance") for r in nodes], dtype=np.int64),
-            )
-        )
-    return forest
+    return pandas_to_forest(pd.DataFrame(list(rows), columns=_FLAT_NODE_COLS))
 
 
-def pandas_to_forest(pdf) -> list[Tree]:
-    """Vectorized ``rows_to_forest`` for an Arrow-collected node table, as
-    a pandas DataFrame or a pyarrow Table (round 6): the fit path moves
-    ~25k nodes × 7 fields through numpy column slices instead of ~175k
-    per-field Python calls. Same load
-    invariants (dense tree ids, dense per-tree node ids, root 0) enforced
-    vectorized; ``rows_to_forest`` remains for Row/dict iterables."""
-    tid_raw = pdf["treeID"].to_numpy()
-    order = np.lexsort((pdf["id"].to_numpy(), tid_raw))
-    tid = tid_raw[order]
-    nid = pdf["id"].to_numpy()[order]
-    fi = pdf["featureIndex"].to_numpy()[order].astype(np.int32)
-    fv = pdf["featureValue"].to_numpy()[order].astype(np.float64)
-    lc = pdf["leftChild"].to_numpy()[order].astype(np.int32)
-    rc = pdf["rightChild"].to_numpy()[order].astype(np.int32)
-    ni = pdf["numInstance"].to_numpy()[order].astype(np.int64)
+def pandas_to_forest(table) -> list[Tree]:
+    """Rebuild a forest from a node table, a pandas DataFrame or a pyarrow
+    Table with the ``FLAT_NODE_SCHEMA`` columns in any row order.
+
+    The node table may come from outside the program (a loaded model), so
+    the reference's load invariants (IForest.scala:259-281) are checked
+    here, column-wise, and a bad table raises a ``ValueError``: no null
+    (or NaN) field, tree ids dense 0..T-1, node ids dense 0..n-1 per tree
+    (root 0), and every internal node's children inside its tree."""
+    cols = {c: table[c].to_numpy() for c in _FLAT_NODE_COLS}
+    for name, v in cols.items():
+        # Arrow and pandas both hand a null integer back as a NaN float
+        if v.dtype.kind == "f" and np.isnan(v).any():
+            raise ValueError(f"tree {cols['treeID'][np.isnan(v)][0]:g}: null or NaN {name}")
+    order = np.lexsort((cols["id"], cols["treeID"]))
+    tid = cols["treeID"][order]
+    nid = cols["id"][order]
+    fi = cols["featureIndex"][order].astype(np.int32)
+    fv = cols["featureValue"][order].astype(np.float64)
+    lc = cols["leftChild"][order].astype(np.int32)
+    rc = cols["rightChild"][order].astype(np.int32)
+    ni = cols["numInstance"][order].astype(np.int64)
     uniq, starts = np.unique(tid, return_index=True)
     if not np.array_equal(uniq, np.arange(len(uniq))):
         raise ValueError(
             f"tree ids must be dense 0..{len(uniq) - 1}, got {uniq.tolist()}"
         )
-    bounds = np.append(starts, len(tid))
-    forest: list[Tree] = []
-    for t in range(len(uniq)):
-        a, b = int(bounds[t]), int(bounds[t + 1])
-        if not np.array_equal(nid[a:b], np.arange(b - a)):
-            raise ValueError(f"tree {t}: node ids must be dense 0..{b - a - 1}")
-        forest.append(
-            Tree(
-                feature_index=fi[a:b].copy(),
-                feature_value=fv[a:b].copy(),
-                left=lc[a:b].copy(),
-                right=rc[a:b].copy(),
-                num_instance=ni[a:b].copy(),
-            )
+    sizes = np.diff(np.append(starts, len(tid)))
+    bad = nid != np.arange(len(tid)) - np.repeat(starts, sizes)
+    if bad.any():
+        t = int(tid[bad][0])
+        raise ValueError(f"tree {t}: node ids must be dense 0..{sizes[t] - 1}")
+    size = np.repeat(sizes, sizes)
+    bad = (fi >= 0) & ((np.minimum(lc, rc) < 0) | (np.maximum(lc, rc) >= size))
+    if bad.any():
+        t = int(tid[bad][0])
+        raise ValueError(
+            f"tree {t}: an internal node has a child outside 0..{sizes[t] - 1}"
         )
-    return forest
+    return [
+        Tree(
+            feature_index=fi[a:b].copy(),
+            feature_value=fv[a:b].copy(),
+            left=lc[a:b].copy(),
+            right=rc[a:b].copy(),
+            num_instance=ni[a:b].copy(),
+        )
+        for a, b in zip(starts.tolist(), (starts + sizes).tolist())
+    ]
 
 
 @dataclass
@@ -243,6 +227,8 @@ class PackedForest:
     #   width the descent reads (0 for a forest of single leaves)
     max_depth: int  # deepest leaf across the forest
     tree_depth: np.ndarray  # int32, per-tree deepest leaf
+    width: int | None = None  # the training row width, when the model
+    #   knows it: rows must then have exactly this width
 
     @property
     def num_trees(self) -> int:

@@ -91,15 +91,21 @@ def anomaly_scores(
     """score = 2^(-avgPathLength / c(psi)) (IForest.scala:92-99).
 
     Rows narrower than ``forest.num_features`` raise a ``ValueError``
-    naming ``features_col`` and both widths. Wider rows are scored on
-    their first columns: the model keeps no training dimension to check
-    them against.
+    naming ``features_col`` and both widths. When the forest knows its
+    training width (``forest.width``), so do rows of any other width;
+    otherwise (a model written without it, such as the reference's) wider
+    rows are scored on their first columns.
     """
     if len(x) and x.shape[1] < forest.num_features:
         raise ValueError(
             f"features column '{features_col}' has rows of width {x.shape[1]}, but the "
             f"forest splits on feature index {forest.num_features - 1}; rows need a "
             f"width of at least {forest.num_features}"
+        )
+    if len(x) and forest.width is not None and x.shape[1] != forest.width:
+        raise ValueError(
+            f"features column '{features_col}' has rows of width {x.shape[1]}, but the "
+            f"model was trained on rows of width {forest.width}"
         )
     norm = avg_length(psi)
     apl = path_lengths(forest, x)

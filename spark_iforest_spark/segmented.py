@@ -33,9 +33,15 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from spark_iforest_spark.nodes import pack_forest, pandas_to_forest, tree_to_rows
+from spark_iforest_spark.nodes import (
+    FLAT_NODE_SCHEMA,
+    pack_forest,
+    pandas_to_forest,
+    tree_to_batch,
+)
 from spark_iforest_spark.scorer import anomaly_scores
 from spark_iforest_spark.trainer import train_tree
 
@@ -233,10 +239,6 @@ def fit_score_groups(
 # at segment granularity, which is what makes per-tenant forests reusable —
 # score tomorrow's events against today's fitted segments without refitting.
 
-_NODE_COLS = (
-    "treeID int, id int, featureIndex int, featureValue double, "
-    "leftChild int, rightChild int, numInstance long"
-)
 _META_COLS = "psi double, threshold double, n_rows long"
 
 
@@ -245,9 +247,10 @@ class SegmentedIForestModel:
 
     ``nodes`` holds one row per tree node keyed by segment — the same
     pre-order flat NodeData encoding as the flagship's model sink
-    (nodes.py:110, reference IForestModel at IForest.scala:283-310) with
-    the per-segment scalars (psi, threshold, n_rows) denormalized onto
-    every row, so the whole model is ONE parquet-writable DataFrame.
+    (``nodes.FLAT_NODE_SCHEMA``, reference IForestModel at
+    IForest.scala:283-310) with the per-segment scalars (psi, threshold,
+    n_rows) denormalized onto every row, so the whole model is ONE
+    parquet-writable DataFrame.
     Scoring new rows is a cogroup of (rows, nodes) by segment: one shuffle
     of the rows + one of the (small) model relation, every segment scored
     in parallel with the flagship's numpy kernels."""
@@ -544,7 +547,7 @@ def fit_groups(
         F.col(features_col).cast("array<double>").alias("_feat"),
     )
     key_type = df.schema[key_col].dataType.simpleString()
-    out_schema = f"_key {key_type}, {_NODE_COLS}, {_META_COLS}"
+    out_schema = f"_key {key_type}, {FLAT_NODE_SCHEMA}, {_META_COLS}"
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
         key = pdf["_key"].iloc[0]
@@ -561,22 +564,11 @@ def fit_groups(
         )
         scores = _blocked_scores(pack_forest(trees), x, float(psi))
         thr = _order_stat_threshold(scores, contamination)
-        rows = [r for t, tree in enumerate(trees) for r in tree_to_rows(t, tree)]
-        return pd.DataFrame(
-            {
-                "_key": [key] * len(rows),
-                "treeID": [r[0] for r in rows],
-                "id": [r[1] for r in rows],
-                "featureIndex": [r[2] for r in rows],
-                "featureValue": [r[3] for r in rows],
-                "leftChild": [r[4] for r in rows],
-                "rightChild": [r[5] for r in rows],
-                "numInstance": [r[6] for r in rows],
-                "psi": float(psi),
-                "threshold": thr,
-                "n_rows": n,
-            }
-        )
+        out = pa.Table.from_batches(
+            [tree_to_batch(t, tree) for t, tree in enumerate(trees)]
+        ).to_pandas()
+        out.insert(0, "_key", [key] * len(out))
+        return out.assign(psi=float(psi), threshold=thr, n_rows=n)
 
     nodes = (
         _cluster_by_key(src)

@@ -1535,10 +1535,7 @@ def current_ann_centers(spark: SparkSession, centers_dir: str):
 def _center_epochs(spark: SparkSession, centers_dir: str) -> list[int]:
     from spark_iforest_spark import fs as hfs
 
-    try:
-        kids = hfs.list_children(spark, centers_dir)
-    except Exception:
-        return []
+    kids = hfs.list_children(spark, centers_dir)
     return sorted(
         int(c["name"][1:-4])
         for c in kids
@@ -1564,7 +1561,14 @@ def ann_ingest_live(
     ``{stats_dir}/e{epoch}``), so :func:`requantize_ann_index_live` can
     swap the quantizer while this stream runs. ``compact_every`` folds
     WITHIN the current epoch's dir. Query with
-    ``similarity.ivf_topk_grouped(queries, latest_ann_index_live(...))``."""
+    ``similarity.ivf_topk_grouped(queries, latest_ann_index_live(...))``.
+
+    ``compact_every`` is unsupported while a live requantize runs. The
+    requantize publishes the new centers before it commits the new
+    epoch's base ``c{M}``; a compaction of the new epoch's dir in that
+    window commits a base ``c{B}`` with B > M, which shadows ``c{M}``
+    (the newest base wins) and garbage-collects its staging dir, so
+    probes silently lose every pre-requantize vector."""
     from spark_iforest_spark.operators import similarity
 
     if compact_every is not None and compact_every < 1:
@@ -1615,10 +1619,7 @@ def ann_ingest_live(
 def _index_epochs(spark: SparkSession, index_dir: str) -> list[int]:
     from spark_iforest_spark import fs as hfs
 
-    try:
-        kids = hfs.list_children(spark, index_dir)
-    except Exception:
-        return []
+    kids = hfs.list_children(spark, index_dir)
     return sorted(
         int(c["name"][1:])
         for c in kids
@@ -1675,7 +1676,13 @@ def requantize_ann_index_live(
 
     Same object-store caveat as the parts compactions: the staged-rename
     commit assumes atomic directory rename (HDFS/local); on rename-
-    emulating object stores run requantizes with the stream stopped."""
+    emulating object stores run requantizes with the stream stopped.
+
+    Unsupported while ``ann_ingest_live`` runs with ``compact_every``:
+    new-epoch batches arrive between step (2) and step (3), and a
+    within-epoch compaction they trigger commits a base ``c{B}`` with
+    B > M that shadows ``c{M}`` and garbage-collects its staging dir, so
+    probes silently lose every migrated vector."""
     from functools import reduce
 
     from spark_iforest_spark import fs as hfs, parts_store

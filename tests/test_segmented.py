@@ -104,11 +104,35 @@ def test_fit_groups_transform_matches_in_place(grouped):
 
 
 def test_fit_groups_layout_invariant_model(grouped):
-    a = sorted(map(tuple, segmented.fit_groups(
-        grouped.repartition(3), "seg", seed=5).nodes.collect()))
+    model = segmented.fit_groups(grouped.repartition(3), "seg", seed=5)
+    a = sorted(map(tuple, model.nodes.collect()))
     b = sorted(map(tuple, segmented.fit_groups(
         grouped.repartition(17), "seg", seed=5).nodes.collect()))
     assert a == b and a
+    # the relation is each segment's forest from the shared kernel, row by
+    # row, with the per-segment scalars
+    from spark_iforest_spark.nodes import pack_forest, tree_to_rows
+
+    assert model.nodes.schema.simpleString() == (
+        "struct<seg:string,treeID:int,id:int,featureIndex:int,featureValue:double,"
+        "leftChild:int,rightChild:int,numInstance:bigint,psi:double,threshold:double,"
+        "n_rows:bigint>"
+    )
+    expected = []
+    for key in ("g0", "g1", "g2"):
+        x = np.array(
+            [r["features"] for r in grouped.where(F.col("seg") == key).collect()]
+        )
+        trees, psi = segmented._segment_forest(x, key, 50, 256, 10, 1.0, 5)
+        thr = segmented._order_stat_threshold(
+            segmented._blocked_scores(pack_forest(trees), x, float(psi)), 0.01
+        )
+        expected += [
+            (key, *r, float(psi), thr, len(x))
+            for t, tree in enumerate(trees)
+            for r in tree_to_rows(t, tree)
+        ]
+    assert a == sorted(expected)
 
 
 def test_save_load_roundtrip_scores_new_rows(grouped, spark, tmp_path):

@@ -890,3 +890,18 @@ def test_prune_versions_composes_with_monitor_states(spark, tmpdir):
         ).collect()
     }
     assert est == {"id": 45}
+
+
+def test_publish_ann_centers_propagates_listing_errors(spark, tmpdir, monkeypatch):
+    # a missing dir lists as []; any other listing failure must surface
+    # instead of restarting the epoch numbering at v0
+    import numpy as np
+
+    from spark_iforest_spark import fs as hfs
+
+    def failing_listing(spark, path):
+        raise OSError(f"cannot list {path}")
+
+    monkeypatch.setattr(hfs, "list_children", failing_listing)
+    with pytest.raises(OSError, match="cannot list"):
+        S.publish_ann_centers(spark, f"{tmpdir}/centers", np.zeros((2, 3)))
