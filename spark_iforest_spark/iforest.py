@@ -35,6 +35,7 @@ preserve the semantics and document the cliff.
 
 from __future__ import annotations
 
+import json
 from dataclasses import replace
 
 import numpy as np
@@ -43,9 +44,7 @@ import pyarrow as pa
 from pyspark.ml import Estimator, Model
 from pyspark.ml.param import Params
 from pyspark.ml.util import (
-    DefaultParamsReadable,
     DefaultParamsReader,
-    DefaultParamsWritable,
     DefaultParamsWriter,
     MLReadable,
     MLReader,
@@ -56,10 +55,11 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, NumericType
 from pyspark.sql.window import Window
 
+from spark_iforest_spark import fs
 from spark_iforest_spark.checkpoint import snapshot
-
 from spark_iforest_spark.nodes import (
     FLAT_NODE_SCHEMA,
+    NESTED_NODE_SCHEMA,
     PackedForest,
     Tree,
     pack_forest,
@@ -111,7 +111,7 @@ def _validate_features_schema(df: DataFrame, features_col: str) -> None:
     )
 
 
-class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsReadable):
+class IForest(Estimator, IForestParams, MLWritable, MLReadable):
     """Isolation Forest estimator (reference: IForest.scala:317-670)."""
 
     def __init__(self, **kwargs):
@@ -173,6 +173,14 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
 
     def setAnomalyScoreCol(self, value: str) -> "IForest":
         return self._checked_set(anomalyScoreCol=value)
+
+    # -------------------------------------------------------- persistence
+    def write(self) -> MLWriter:
+        return IForestWriter(self)
+
+    @classmethod
+    def read(cls) -> MLReader:
+        return IForestReader()
 
     # ------------------------------------------------------------------ fit
     def _fit(self, dataset: DataFrame) -> "IForestModel":
@@ -284,9 +292,10 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
 
         # Reference fit eagerly transforms the training set, fixing the
         # model threshold from training-score quantiles (IForest.scala:542-548).
-        # Fit already counted the input — hand the size to transform so the
-        # exact-threshold path can use the order-statistic plan without a
-        # second count job (consumed once, see _transform).
+        # Fit already counted the input — hand the size to transform so
+        # neither a fractional maxSamples nor the exact-threshold
+        # order-statistic plan runs a second count job (consumed once, see
+        # _transform).
         model._threshold_n_hint = n
         predictions = model.transform(dataset)
         model._summary = IForestSummary(
@@ -510,6 +519,9 @@ class IForestModel(Model, IForestParams, MLWritable, MLReadable):
         score_col = self.getAnomalyScoreCol()
         pred_col = self.getPredictionCol()
         max_samples = self.getMaxSamples()
+        # the input size fit already counted, consumed once: fit's own
+        # transform reuses it, a later transform counts its input
+        n, self._threshold_n_hint = self._threshold_n_hint, None
 
         if max_samples > 1.0:
             psi = float(max_samples)
@@ -523,7 +535,9 @@ class IForestModel(Model, IForestParams, MLWritable, MLReadable):
             # Reference recomputes the normalizer from the *scored* dataset's
             # size — same row can score differently on different-sized inputs
             # (README.md:56). Preserved.
-            psi = max_samples * dataset.count()
+            if n is None:
+                n = dataset.count()
+            psi = max_samples * n
 
         score_udf = make_score_udf(
             self._forest_broadcast(dataset.sparkSession), psi, features_col
@@ -538,7 +552,7 @@ class IForestModel(Model, IForestParams, MLWritable, MLReadable):
                     "streaming transform requires setThreshold(...); the "
                     "contamination-quantile threshold needs a batch pass"
                 )
-            self._threshold = self._compute_threshold(dataset, scored, score_col)
+            self._threshold = self._compute_threshold(dataset, scored, score_col, n)
 
         # Catalyst expression instead of the reference's predict UDF — stays
         # inside whole-stage codegen.
@@ -553,7 +567,9 @@ class IForestModel(Model, IForestParams, MLWritable, MLReadable):
     # single-task-sort an unbounded set.
     _EXACT_TOPK_MAX = 10_000_000
 
-    def _compute_threshold(self, dataset: DataFrame, scored: DataFrame, score_col: str) -> float:
+    def _compute_threshold(
+        self, dataset: DataFrame, scored: DataFrame, score_col: str, n: int | None
+    ) -> float:
         """Contamination-quantile threshold over the scored dataset.
 
         relErr == 0 asks for the EXACT quantile. Spark's approxQuantile at
@@ -567,17 +583,15 @@ class IForestModel(Model, IForestParams, MLWritable, MLReadable):
         k rows into one final task, ~15× faster at sf0.1. Used whenever k
         is bounded (k ≤ _EXACT_TOPK_MAX); the mergeable-sketch path remains
         for relErr > 0 (the 100 TB configuration, gated separately) and for
-        unbounded k. The input size n reuses fit's count via
-        _threshold_n_hint (consumed once); a standalone transform pays one
-        count job — metadata-cheap on file-backed input.
+        unbounded k. ``n`` is the input size when the caller knows it (fit's
+        count, or transform's own for a fractional maxSamples); otherwise
+        this pays one count job — metadata-cheap on file-backed input.
         """
         import math
 
         q = 1.0 - self.getContamination()
         rel_err = self.getApproxQuantileRelativeError()
         if rel_err == 0.0:
-            n = self._threshold_n_hint
-            self._threshold_n_hint = None
             if n is None:
                 n = dataset.count()
             rank = math.ceil(q * n)
@@ -612,47 +626,93 @@ class IForestModel(Model, IForestParams, MLWritable, MLReadable):
     def read(cls) -> MLReader:
         return IForestModelReader()
 
-    def save(self, path: str) -> None:
-        self.write().save(path)
 
-    @classmethod
-    def load(cls, path: str) -> "IForestModel":
-        return cls.read().load(path)
+def _save(
+    instance: Params, path: str, spark, extra: dict | None = None, data: pa.Table | None = None
+) -> None:
+    """Saves in the reference's layout (IForest.scala:283-310): ``data``, if
+    any, as the ``path/data`` parquet, then PySpark's ``DefaultParamsWriter``
+    JSON as ``path/metadata/part-00000`` (the reference's ``saveAsTextFile``
+    name) through the Hadoop FileSystem, with no Spark job. Refuses an
+    existing ``path`` (``overwrite()`` deletes it first); the metadata goes
+    last, so a save cut short does not load."""
+    if fs.exists(spark, path):
+        raise FileExistsError(
+            f"Path {path} already exists. To overwrite it, use write().overwrite().save(path)."
+        )
+    if data is not None:
+        spark.createDataFrame(data).write.parquet(path + "/data")
+    meta = DefaultParamsWriter._get_metadata_to_save(instance, spark, extra)
+    fs.write_bytes(spark, path + "/metadata/part-00000", (meta + "\n").encode("utf-8"))
 
 
-class IForestModelWriter(MLWriter):
-    """Writes metadata JSON + pre-order NodeData parquet — the same on-disk
-    layout as the reference (IForest.scala:283-296): ``path/metadata`` and
-    ``path/data`` with nested EnsembleNodeData rows. The metadata also
-    carries ``numFeatures``, the training width, when the model knows it."""
+def _load(instance: Params, path: str, spark) -> dict:
+    """Sets ``instance``'s uid and params from the first line of the first
+    ``path/metadata`` part file in name order (``part-00000``, or PySpark's
+    ``part-00000-<uuid>-c000.txt``; names starting with ``_`` or ``.`` are
+    skipped, as Hadoop's readers do) and returns the metadata."""
+    meta_dir = path + "/metadata"
+    parts = sorted(
+        (c["name"], c["path"])
+        for c in fs.list_children(spark, meta_dir)
+        if not c["is_dir"] and not c["name"].startswith(("_", "."))
+    )
+    if not parts:
+        raise FileNotFoundError(
+            f"no metadata part file in {meta_dir}: not a saved model, or its save did not finish"
+        )
+    metadata = json.loads(fs.read_bytes(spark, parts[0][1]).decode("utf-8").split("\n", 1)[0])
+    expected = type(instance).__name__
+    found = metadata["class"]
+    if found.rsplit(".", 1)[-1] != expected:
+        raise ValueError(f"expected {expected} metadata in {meta_dir}, found class {found}")
+    instance._resetUid(metadata["uid"])
+    DefaultParamsReader.getAndSetParams(instance, metadata)
+    return metadata
 
-    def __init__(self, instance: IForestModel):
+
+class IForestWriter(MLWriter):
+    """Writes the estimator's params as ``path/metadata``."""
+
+    def __init__(self, instance: Params):
         super().__init__()
         self.instance = instance
 
     def saveImpl(self, path: str) -> None:
+        _save(self.instance, path, self.sparkSession)
+
+
+class IForestReader(MLReader):
+    def load(self, path: str) -> IForest:
+        est = IForest()
+        _load(est, path, self.sparkSession)
+        return est
+
+
+class IForestModelWriter(IForestWriter):
+    """Writes the params and the pre-order NodeData parquet: ``path/data``
+    with nested EnsembleNodeData rows. The metadata also carries
+    ``numFeatures``, the training width, when the model knows it."""
+
+    def saveImpl(self, path: str) -> None:
         model = self.instance
         extra = None if model._num_features is None else {"numFeatures": model._num_features}
-        DefaultParamsWriter.saveMetadata(model, path, self.sc, extraMetadata=extra)
         nodes = pa.Table.from_batches([tree_to_batch(t, tree) for t, tree in enumerate(model.trees)])
         # the reference layout: treeID, then the other node columns nested
         # in a nullable nodeData struct
         nested = nodes.drop_columns("treeID").to_struct_array()
         data = pa.table({"treeID": nodes["treeID"], "nodeData": nested})
-        self.sparkSession.createDataFrame(data).write.parquet(path + "/data")
+        _save(model, path, self.sparkSession, extra, data)
 
 
 class IForestModelReader(MLReader):
     def load(self, path: str) -> IForestModel:
-        metadata = DefaultParamsReader.loadMetadata(path, self.sc)
-        class_name = metadata["class"]
-        if "IForestModel" not in class_name:
-            raise ValueError(f"expected IForestModel metadata, found class {class_name}")
-        nodes = self.sparkSession.read.parquet(path + "/data").select("treeID", "nodeData.*")
-        model = IForestModel(trees=pandas_to_forest(nodes.toArrow()))
+        spark = self.sparkSession
+        model = IForestModel()
+        metadata = _load(model, path, spark)
+        nodes = spark.read.schema(NESTED_NODE_SCHEMA).parquet(path + "/data")
+        model._trees = pandas_to_forest(nodes.select("treeID", "nodeData.*").toArrow())
         model._num_features = metadata.get("numFeatures")
-        model._resetUid(metadata["uid"])
-        DefaultParamsReader.getAndSetParams(model, metadata)
         return model
 
 

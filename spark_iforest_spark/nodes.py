@@ -37,6 +37,11 @@ FLAT_NODE_SCHEMA = (
     "leftChild INT, rightChild INT, numInstance BIGINT"
 )
 _FLAT_NODE_COLS = [c.split()[0] for c in FLAT_NODE_SCHEMA.split(", ")]
+# The persisted layout, declared so the model reader skips Spark's schema
+# inference over the parquet footers. A field missing from a file reads
+# as null, which ``pandas_to_forest`` rejects.
+_TREE_ID_COL, _NODE_DATA_COLS = FLAT_NODE_SCHEMA.split(", ", 1)
+NESTED_NODE_SCHEMA = f"{_TREE_ID_COL}, nodeData STRUCT<{_NODE_DATA_COLS}>"
 
 
 @dataclass

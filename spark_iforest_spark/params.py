@@ -3,8 +3,8 @@
 Mirrors the 12 params of the reference's ``IForestParams`` trait
 (reference: IForest.scala:671-894, defaults at :340-349) with the same
 validation rules, expressed as standard ``pyspark.ml.param`` machinery so
-our estimator composes with ``pyspark.ml.Pipeline`` and persists via
-``DefaultParamsWriter``.
+our estimator composes with ``pyspark.ml.Pipeline`` and persists as
+``DefaultParamsWriter``'s metadata JSON.
 """
 
 from __future__ import annotations

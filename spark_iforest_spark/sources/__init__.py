@@ -1,7 +1,7 @@
 """Source/sink helpers (SURVEY.md §2.2 S1-S5 parity + testdata plumbing).
 
-S1 CSV scan, S2/S3 model parquet sink/scan (in iforest.persistence), S4 JSON
-metadata (DefaultParamsWriter), S5 in-memory. Plus the synthetic-table
+S1 CSV scan, S2/S3 model parquet sink/scan and S4 JSON metadata (the
+iforest model writer and reader), S5 in-memory. Plus the synthetic-table
 reader that hides the TIMESTAMP(NANOS) quirk of the driver-generated
 parquet.
 """

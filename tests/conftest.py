@@ -19,6 +19,10 @@ def spark():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
+        # PySpark's daemon without its per-task zip directory re-reads
+        # (see spark_worker_daemon.py)
+        .config("spark.python.daemon.module", "spark_worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.abspath(__file__)))
         .getOrCreate()
     )
     yield spark

@@ -325,6 +325,32 @@ def test_fractional_psi_norm_factor(spark):
     assert s10 != pytest.approx(s5)  # same row scores differently — by design
 
 
+def test_fractional_maxsamples_fit_counts_its_input_once(spark, monkeypatch):
+    # fit hands its count to its own transform, which takes both the
+    # normalizer and the exact threshold from it
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    df = spark.createDataFrame(
+        [(i, Vectors.dense([float(i % 7), float(i * i % 11)])) for i in range(40)],
+        ["i", "features"],
+    )
+    calls = []
+    count = DataFrame.count
+    monkeypatch.setattr(DataFrame, "count", lambda self: calls.append(self) or count(self))
+    model = IForest(numTrees=10, maxSamples=0.5, contamination=0.2, seed=10).fit(df)
+    assert len(calls) == 1
+    monkeypatch.undo()
+    # a standalone transform counts its input itself
+    fresh = model.copy().setThreshold(-1.0)
+    scored = fresh.transform(df)
+    assert fresh.getThreshold() == model.getThreshold()
+
+    def scores(out):
+        return [r["anomalyScore"] for r in out.orderBy("i").collect()]
+
+    assert scores(model.summary.predictions) == scores(scored)
+
+
 def test_fit_layout_invariant(spark, sf_dir):
     """The whole fit->score path must be a pure function of (data, seed):
     rids come from a full-64-bit-hash order (not partition layout), the

@@ -7,6 +7,8 @@ documented quirk that threshold is NOT persisted.
 """
 
 import glob
+import json
+import os
 import shutil
 import tempfile
 
@@ -16,7 +18,7 @@ import pytest
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.feature import VectorAssembler
 from pyspark.ml.linalg import Vectors
-from pyspark.ml.util import DefaultParamsWriter
+from pyspark.ml.util import DefaultParamsReader, DefaultParamsWriter
 
 from spark_iforest_spark import IForest, IForestModel
 from spark_iforest_spark.nodes import pandas_to_forest, tree_to_rows
@@ -181,6 +183,129 @@ def test_metadata_without_width_loads_and_scores(spark, tmp_path_str):
     loaded.setThreshold(model.getThreshold())
     # wider rows are scored on their first columns, as the reference does
     assert _scores(loaded, _width_df(spark, 3)) == _scores(model, _width_df(spark, 2))
+
+
+def _fit_and_save(spark, path):
+    model = IForest(numTrees=5, maxSamples=10.0, seed=3).fit(_width_df(spark, 2))
+    model.write().overwrite().save(path)
+    return model
+
+
+def _assert_loads_equal(path, model):
+    loaded = IForestModel.load(path)
+    assert loaded.uid == model.uid and loaded.trees == model.trees
+    assert loaded._num_features == model._num_features
+    for p in model.params:
+        assert loaded.getOrDefault(p.name) == model.getOrDefault(p.name), p.name
+
+
+def test_written_metadata_reads_back_through_pyspark_and_spark(spark, tmp_path_str):
+    model = _fit_and_save(spark, tmp_path_str)
+    meta_dir = tmp_path_str + "/metadata"
+    assert sorted(n for n in os.listdir(meta_dir) if not n.startswith(".")) == ["part-00000"]
+    with open(meta_dir + "/part-00000") as f:
+        written = json.loads(f.readline())
+    assert written["class"] == "spark_iforest_spark.iforest.IForestModel"
+    assert written["numFeatures"] == 2
+    assert DefaultParamsReader.loadMetadata(tmp_path_str, spark) == written
+    (row,) = spark.read.json(meta_dir).collect()
+    assert row.asDict(recursive=True) == written
+    _assert_loads_equal(tmp_path_str, model)
+
+
+def test_reader_loads_pyspark_and_reference_metadata_layouts(spark, tmp_path_str):
+    model = _fit_and_save(spark, tmp_path_str)
+    meta_dir = tmp_path_str + "/metadata"
+    extra = {"numFeatures": 2}
+    # PySpark 4's DefaultParamsWriter: part-00000-<uuid>-c000.txt, _SUCCESS
+    # and checksum files
+    shutil.rmtree(meta_dir)
+    DefaultParamsWriter.saveMetadata(model, tmp_path_str, spark, extraMetadata=extra)
+    names = os.listdir(meta_dir)
+    assert "_SUCCESS" in names and any(n.startswith(".") for n in names)
+    assert any(n.startswith("part-00000-") and n.endswith("-c000.txt") for n in names)
+    _assert_loads_equal(tmp_path_str, model)
+    # the reference (Spark 2.4): sc.parallelize(Seq(json), 1).saveAsTextFile
+    shutil.rmtree(meta_dir)
+    meta = DefaultParamsWriter._get_metadata_to_save(model, spark, extra)
+    spark.sparkContext.parallelize([meta], 1).saveAsTextFile(meta_dir)
+    assert {"part-00000", "_SUCCESS"} <= set(os.listdir(meta_dir))
+    _assert_loads_equal(tmp_path_str, model)
+
+
+def _spark_jobs(spark, fn):
+    """The number of Spark jobs ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    group = "persistence-" + os.urandom(6).hex()
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_model_save_and_load_run_one_spark_job_each(spark, tmp_path_str):
+    model = IForest(numTrees=5, maxSamples=10.0, seed=3).fit(small_df(spark))
+    path = tmp_path_str + "/model"
+    assert _spark_jobs(spark, lambda: model.save(path)) == 1
+    assert _spark_jobs(spark, lambda: IForestModel.load(path)) == 1
+    est = IForest(**ALL_PARAM_SETTINGS)
+    assert _spark_jobs(spark, lambda: est.save(tmp_path_str + "/est")) == 0
+    assert _spark_jobs(spark, lambda: IForest.load(tmp_path_str + "/est")) == 0
+
+
+def _tree_state(path):
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), path), os.stat(os.path.join(d, f)).st_mtime_ns)
+        for d, _, files in os.walk(path)
+        for f in files
+    )
+
+
+@pytest.mark.parametrize("stage", ["model", "estimator"])
+def test_save_without_overwrite_refuses_an_existing_path(spark, tmp_path_str, stage):
+    model = _fit_and_save(spark, tmp_path_str)
+    before = _tree_state(tmp_path_str)
+    instance = model if stage == "model" else IForest()
+    with pytest.raises(FileExistsError, match="already exists"):
+        instance.save(tmp_path_str)
+    assert _tree_state(tmp_path_str) == before
+    _assert_loads_equal(tmp_path_str, model)
+
+
+def test_save_cut_short_before_its_metadata_does_not_load(spark, tmp_path_str):
+    # the writer writes data first and metadata last
+    _fit_and_save(spark, tmp_path_str)
+    shutil.rmtree(tmp_path_str + "/metadata")
+    with pytest.raises(FileNotFoundError, match=f"{tmp_path_str}/metadata"):
+        IForestModel.load(tmp_path_str)
+    os.makedirs(tmp_path_str + "/metadata")
+    open(tmp_path_str + "/metadata/_SUCCESS", "w").close()
+    with pytest.raises(FileNotFoundError, match=f"{tmp_path_str}/metadata"):
+        IForestModel.load(tmp_path_str)
+
+
+def test_node_table_missing_a_field_is_rejected(spark, tmp_path_str):
+    model = _fit_and_save(spark, tmp_path_str)
+    rows = [(t, r[1:-1]) for t, tree in enumerate(model.trees) for r in tree_to_rows(t, tree)]
+    schema = (
+        "treeID INT, nodeData STRUCT<id: INT, featureIndex: INT, featureValue: DOUBLE, "
+        "leftChild: INT, rightChild: INT>"
+    )
+    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(tmp_path_str + "/data")
+    with pytest.raises(ValueError, match=r"tree \d+: null or NaN numInstance"):
+        IForestModel.load(tmp_path_str)
+
+
+def test_estimator_metadata_is_checked_for_its_class(spark, tmp_path_str):
+    IForest(**ALL_PARAM_SETTINGS).save(tmp_path_str + "/est")
+    with pytest.raises(ValueError, match="expected IForestModel metadata"):
+        IForestModel.load(tmp_path_str + "/est")
+    _fit_and_save(spark, tmp_path_str + "/model")
+    with pytest.raises(ValueError, match="expected IForest metadata"):
+        IForest.load(tmp_path_str + "/model")
 
 
 def _node_table(**tree1_root):
