@@ -5,12 +5,15 @@ event type / tenant" — needs a forest per segment, not one global model
 whose scores conflate segments with different base distributions. The
 reference has no per-group mode; this module adds it Spark-first:
 
-* ONE ``groupBy(key).applyInPandas`` pass — each task fits its segment's
+* ONE ``groupBy(key).applyInArrow`` pass — each task fits its segment's
   forest with the exact same pure-numpy kernels the flagship uses
   (``trainer.train_tree``, ``nodes.pack_forest``,
   ``scorer.anomaly_scores``) and scores the segment in place. No nested
   Spark jobs, no driver loop over keys: at 100 TB this is a single
   shuffle keyed by segment, with every segment training in parallel.
+  Rows, keys and node tables stay Arrow values end to end; features
+  become a numpy matrix through ``scorer._features_matrix``, the
+  flagship's one conversion.
 * Determinism: the per-segment RNG seeds from
   ``SeedSequence([seed, md5(key)])`` — a pure function of (data, params,
   key), independent of partition layout or segment arrival order
@@ -18,12 +21,19 @@ reference has no per-group mode; this module adds it Spark-first:
 * Per-segment threshold: the exact ``ceil((1-contamination) * n)``-th
   smallest score (same order-statistic definition as the flagship's
   relErr=0 path), computed in-task; prediction = score > threshold.
+* Keys group as Spark groups them: a NULL key is one segment and a NaN
+  key another, and both come back with the key they were fitted under.
 
-Bounds: a segment must fit one task (same contract as every
-``applyInPandas`` group in the repo — the assignment shuffle carries the
-segment's rows once). For segments beyond task memory, fall back to the
-global ``IForest`` on that segment's slice; ``max_rows_per_group`` makes
-the failure explicit instead of an executor OOM.
+Bad rows: in a segment that is fitted (or being fitted), a null or uneven
+features row raises ``_features_matrix``'s ``ValueError`` naming the
+features column; when scoring, rows of a segment with no fitted model
+are never read and come back with a NULL score and prediction.
+
+Bounds: a segment must fit one task (same contract as every grouped
+Arrow stage in the repo — the assignment shuffle carries the segment's
+rows once). For segments beyond task memory, fall back to the global
+``IForest`` on that segment's slice; ``max_rows_per_group`` makes the
+failure explicit instead of an executor OOM.
 """
 
 from __future__ import annotations
@@ -32,8 +42,8 @@ import hashlib
 import math
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from spark_iforest_spark.nodes import (
@@ -42,7 +52,7 @@ from spark_iforest_spark.nodes import (
     pandas_to_forest,
     tree_to_batch,
 )
-from spark_iforest_spark.scorer import anomaly_scores
+from spark_iforest_spark.scorer import _features_matrix, anomaly_scores
 from spark_iforest_spark.trainer import train_tree
 
 # transform_broadcast buffers incoming Arrow batches to this many rows
@@ -52,40 +62,30 @@ from spark_iforest_spark.trainer import train_tree
 # executor budget).
 _SCORE_BUFFER_ROWS = 65_536
 
-# whole-segment kernel calls cap their row-block size here: the descent's
-# B-sized working arrays (scorer.path_lengths) must stay cache-resident —
-# a 500k-row segment scored in one call streams multi-MB arrays through
-# every numpy op, which collapses under many concurrent workers exactly
-# like the (T,B) formulation the scorer rejects. 16k rows ≈ 128 KB per
-# working array. Scores are bit-identical (row-independent kernel).
-_SCORE_BLOCK_ROWS = 16_384
-
-
-def _blocked_scores(forest, x: np.ndarray, psi: float) -> np.ndarray:
-    """anomaly_scores over row blocks of ``_SCORE_BLOCK_ROWS`` — same
-    values (each row's descent is independent), bounded working set."""
-    n = len(x)
-    if n <= _SCORE_BLOCK_ROWS:
-        return anomaly_scores(forest, x, psi)
-    out = np.empty(n, dtype=np.float64)
-    for lo in range(0, n, _SCORE_BLOCK_ROWS):
-        hi = min(lo + _SCORE_BLOCK_ROWS, n)
-        out[lo:hi] = anomaly_scores(forest, x[lo:hi], psi)
-    return out
-
 
 def _group_seed(seed: int, key) -> np.random.SeedSequence:
-    # canonicalize numpy scalars BEFORE repr (round-8 advice fix):
-    # executor-side keys arrive as numpy scalars (pdf["_key"].iloc[0])
-    # while driver recomputes pass Python ints — repr() agrees on
-    # numpy<2.0 ('3' == '3') but numpy>=2.0 reprs np.int32(3) as
-    # 'np.int32(3)', which would silently break the pure-function-of-
-    # (rows, params, key) determinism contract. .item() is bit-neutral
-    # on the current pin (same repr), so fitted forests are unchanged.
+    # canonicalize numpy scalars BEFORE repr (round-8 advice fix): a
+    # caller may pass a numpy scalar where another passes the Python
+    # value — repr() agrees on numpy<2.0 ('3' == '3') but numpy>=2.0
+    # reprs np.int32(3) as 'np.int32(3)', which would silently break the
+    # pure-function-of-(rows, params, key) determinism contract. The
+    # Spark stages pass the Arrow key's ``as_py()``.
     if hasattr(key, "item"):
         key = key.item()
     h = int(hashlib.md5(repr(key).encode("utf-8")).hexdigest()[:8], 16)
     return np.random.SeedSequence([seed & 0x7FFFFFFF, h])
+
+
+def _utc_key(table: pa.Table) -> pa.Table:
+    """``table`` with a TIMESTAMP ``_key`` cast to UTC: the same instants.
+    Spark hands such keys to a UDF in the session time zone but accepts
+    them back only in UTC, and a UTC key seeds its segment the same way
+    whatever the session time zone."""
+    i = table.schema.get_field_index("_key")
+    t = table.schema.types[i]
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        return table.set_column(i, "_key", table.column(i).cast(pa.timestamp(t.unit, "UTC")))
+    return table
 
 
 def _segment_forest(
@@ -130,21 +130,102 @@ def _segment_forest(
     return trees, psi
 
 
-def _norm_key(key):
-    """Canonical missing-key form for driver-side dicts: None and NaN
-    both map to None (NaN is not equal to itself, so it cannot be a
-    reliable dict key)."""
-    if key is None or (isinstance(key, float) and key != key):
-        return None
-    return key
+def _fit_segment(
+    table: pa.Table,
+    features_col: str,
+    num_trees: int,
+    max_samples: int,
+    max_depth: int,
+    max_features: float,
+    contamination: float,
+    seed: int,
+    max_rows_per_group: int,
+):
+    """(trees, psi, scores, threshold) for the one segment in ``table``
+    (``_key``, ``_feat`` columns): the task body of ``fit_score_groups``
+    and ``fit_groups``, which score the training rows the same way."""
+    key = table.column("_key")[0].as_py()
+    n = table.num_rows
+    if n > max_rows_per_group:
+        raise ValueError(
+            f"segment {key!r} has {n} rows > max_rows_per_group="
+            f"{max_rows_per_group}; fit the global IForest on this "
+            "segment instead"
+        )
+    x = _features_matrix(table.column("_feat").combine_chunks(), features_col)
+    trees, psi = _segment_forest(
+        x, key, num_trees, max_samples, max_depth, max_features, seed
+    )
+    scores = anomaly_scores(pack_forest(trees), x, float(psi), features_col)
+    return trees, psi, scores, _order_stat_threshold(scores, contamination)
+
+
+def _group_positions(seg: np.ndarray) -> list:
+    """(segment number, row positions in ascending order) for each
+    distinct value of ``seg``, in increasing segment order."""
+    order = np.argsort(seg, kind="stable")
+    cuts = np.flatnonzero(np.diff(seg[order])) + 1
+    return [(int(seg[idx[0]]), idx) for idx in np.split(order, cuts) if len(idx)]
+
+
+def _score_segments(rows: pa.Table, seg: np.ndarray, models: list, features_col: str) -> pa.Table:
+    """``rows``' ``_key`` [``_id``] with the anomalyScore and prediction
+    of row i under ``models[seg[i]]`` (forest, psi, threshold). A row with
+    ``seg`` -1 has no fitted segment: its features are never read, and its
+    score and prediction are NULL."""
+    n = rows.num_rows
+    scores = np.zeros(n, dtype=np.float64)
+    preds = np.zeros(n, dtype=np.int32)
+    feat = rows.column("_feat").combine_chunks()
+    for g, idx in _group_positions(seg):
+        if g < 0:
+            continue
+        forest, psi, thr = models[g]
+        x = _features_matrix(feat.take(idx), features_col)
+        s = anomaly_scores(forest, x, psi, features_col)
+        scores[idx] = s
+        preds[idx] = s > thr
+    return _with_scores(rows, scores, preds, unfitted=seg < 0)
+
+
+def _with_scores(rows: pa.Table, scores, preds, unfitted=None) -> pa.Table:
+    """``rows`` with ``_feat`` replaced by the anomalyScore and prediction
+    columns, NULL where ``unfitted`` is set."""
+    return (
+        rows.drop_columns(["_feat"])
+        .append_column("anomalyScore", pa.array(scores, mask=unfitted))
+        .append_column("prediction", pa.array(preds, mask=unfitted))
+    )
+
+
+def _scoring_io(df: DataFrame, key_col: str, features_col: str, id_col: str | None):
+    """(src, out_schema, rename) for a segmented scoring stage: the
+    ``_key`` [``_id``] ``_feat`` projection it reads, the Spark schema of
+    its ``_key`` [``_id``] anomalyScore prediction output, and the
+    function that gives that output the caller's column names back."""
+    sel = [F.col(key_col).alias("_key"), F.col(features_col).cast("array<double>").alias("_feat")]
+    id_part = ""
+    if id_col is not None:
+        sel.insert(1, F.col(id_col).alias("_id"))
+        id_part = f"_id {df.schema[id_col].dataType.simpleString()}, "
+    key_type = df.schema[key_col].dataType.simpleString()
+    out_schema = f"_key {key_type}, {id_part}anomalyScore double, prediction int"
+
+    def rename(result: DataFrame) -> DataFrame:
+        cols = [F.col("_key").alias(key_col)]
+        if id_col is not None:
+            cols.append(F.col("_id").alias(id_col))
+        return result.select(*cols, "anomalyScore", "prediction")
+
+    return df.select(*sel), out_schema, rename
 
 
 def _cluster_by_key(src: DataFrame) -> DataFrame:
     """Hash-cluster on ``_key`` with an EXPLICIT partition count before a
-    grouped Pandas stage. Without this, AQE's size-based coalescing sees a
+    grouped Arrow stage. Without this, AQE's size-based coalescing sees a
     few MB of shuffle data and folds the whole groupBy into ONE partition
     — correct for IO-bound aggregates, catastrophic for a compute-bound
-    applyInPandas (measured: 32 segments fitting serially in one Python
+    grouped map (measured: 32 segments fitting serially in one Python
     worker, 6.2 s where 8-way parallel takes ~1 s). An explicit
     ``repartition(n, key)`` satisfies the grouped distribution requirement
     (no second exchange) and AQE leaves user-specified counts alone."""
@@ -188,48 +269,20 @@ def fit_score_groups(
     segment (the point of segmentation), not across segments with
     different ψ.
     """
-    sel = [F.col(key_col).alias("_key"), F.col(features_col).cast("array<double>").alias("_feat")]
-    if id_col is not None:
-        sel.insert(1, F.col(id_col).alias("_id"))
-    src = df.select(*sel)
-    key_type = df.schema[key_col].dataType.simpleString()
-    id_part = f"_id {df.schema[id_col].dataType.simpleString()}, " if id_col else ""
-    out_schema = (
-        f"_key {key_type}, {id_part}anomalyScore double, prediction int"
-    )
+    src, out_schema, rename = _scoring_io(df, key_col, features_col, id_col)
 
-    def fit_score(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["_key"].iloc[0]
-        n = len(pdf)
-        if n > max_rows_per_group:
-            raise ValueError(
-                f"segment {key!r} has {n} rows > max_rows_per_group="
-                f"{max_rows_per_group}; fit the global IForest on this "
-                "segment instead"
-            )
-        x = np.asarray(pdf["_feat"].to_list(), dtype=np.float64)
-        trees, psi = _segment_forest(
-            x, key, num_trees, max_samples, max_depth, max_features, seed
+    def fit_score(table):
+        table = _utc_key(table)
+        _, _, scores, thr = _fit_segment(
+            table, features_col, num_trees, max_samples, max_depth,
+            max_features, contamination, seed, max_rows_per_group,
         )
-        forest = pack_forest(trees)
-        scores = _blocked_scores(forest, x, float(psi))
-        # threshold = the ceil((1-contamination)*n)-th smallest score,
-        # prediction = score > threshold
-        thr = _order_stat_threshold(scores, contamination)
-        out = {"_key": pdf["_key"]}
-        if id_col is not None:
-            out["_id"] = pdf["_id"]
-        out["anomalyScore"] = scores
-        out["prediction"] = (scores > thr).astype(np.int32)
-        return pd.DataFrame(out)
+        # prediction = score > the segment's order-statistic threshold
+        return _with_scores(table, scores, (scores > thr).astype(np.int32))
 
-    result = _cluster_by_key(src).groupBy("_key").applyInPandas(
-        fit_score, schema=out_schema
+    return rename(
+        _cluster_by_key(src).groupBy("_key").applyInArrow(fit_score, schema=out_schema)
     )
-    renames = [F.col("_key").alias(key_col)]
-    if id_col is not None:
-        renames.append(F.col("_id").alias(id_col))
-    return result.select(*renames, "anomalyScore", "prediction")
 
 
 # ------------------------------------------------------- model lifecycle
@@ -240,6 +293,15 @@ def fit_score_groups(
 # score tomorrow's events against today's fitted segments without refitting.
 
 _META_COLS = "psi double, threshold double, n_rows long"
+
+
+def _segment_model(nodes: pa.Table) -> tuple:
+    """(packed forest, psi, threshold) of one segment's node rows."""
+    return (
+        pack_forest(pandas_to_forest(nodes)),
+        nodes.column("psi")[0].as_py(),
+        nodes.column("threshold")[0].as_py(),
+    )
 
 
 class SegmentedIForestModel:
@@ -287,48 +349,21 @@ class SegmentedIForestModel:
         the parquet round-trip losslessly), same psi, same stored
         threshold."""
         fcol = features_col or self.features_col
-        key_col = self.key_col
-        sel = [F.col(key_col).alias("_key"), F.col(fcol).cast("array<double>").alias("_feat")]
-        if id_col is not None:
-            sel.insert(1, F.col(id_col).alias("_id"))
-        src = df.select(*sel)
-        key_type = df.schema[key_col].dataType.simpleString()
-        id_part = f"_id {df.schema[id_col].dataType.simpleString()}, " if id_col else ""
-        out_schema = f"_key {key_type}, {id_part}anomalyScore double, prediction int"
-        nodes = self.nodes.withColumnRenamed(key_col, "_key")
+        src, out_schema, rename = _scoring_io(df, self.key_col, fcol, id_col)
+        nodes = self.nodes.withColumnRenamed(self.key_col, "_key")
 
-        def score(rows: pd.DataFrame, model: pd.DataFrame) -> pd.DataFrame:
-            if not len(rows):
-                return pd.DataFrame(
-                    {c: [] for c in ["_key", *(["_id"] if id_col else []), "anomalyScore", "prediction"]}
-                )
-            out = {"_key": rows["_key"]}
-            if id_col is not None:
-                out["_id"] = rows["_id"]
-            if not len(model):
-                # unfitted segment: true SQL NULLs (nullable pandas dtypes
-                # — a float NaN would survive as NaN, not NULL)
-                out["anomalyScore"] = pd.array([None] * len(rows), dtype="Float64")
-                out["prediction"] = pd.array([None] * len(rows), dtype="Int32")
-                return pd.DataFrame(out)
-            forest = pack_forest(pandas_to_forest(model))
-            x = np.asarray(rows["_feat"].to_list(), dtype=np.float64)
-            scores = _blocked_scores(forest, x, float(model["psi"].iloc[0]))
-            thr = float(model["threshold"].iloc[0])
-            out["anomalyScore"] = scores
-            out["prediction"] = (scores > thr).astype(np.int32)
-            return pd.DataFrame(out)
+        def score(rows, model):
+            # the cogroup holds one segment: its model, or none if unfitted
+            models = [_segment_model(model)] if model.num_rows else []
+            seg = np.full(rows.num_rows, 0 if models else -1)
+            return _score_segments(_utc_key(rows), seg, models, fcol)
 
-        result = (
+        return rename(
             _cluster_by_key(src)
             .groupby("_key")
             .cogroup(_cluster_by_key(nodes).groupby("_key"))
-            .applyInPandas(score, schema=out_schema)
+            .applyInArrow(score, schema=out_schema)
         )
-        renames = [F.col("_key").alias(key_col)]
-        if id_col is not None:
-            renames.append(F.col("_id").alias(id_col))
-        return result.select(*renames, "anomalyScore", "prediction")
 
     def transform_broadcast(
         self,
@@ -343,10 +378,12 @@ class SegmentedIForestModel:
         which Structured Streaming's micro-batch planner cannot host; this
         variant instead collects the (small by design — O(segments ·
         num_trees · psi) rows, guarded by ``max_nodes``) node relation to
-        the driver once, packs one forest per segment, and ships the dict
-        inside an Arrow ``mapInPandas`` closure: zero shuffle, rows scored
-        in place, the same plan shape as the flagship's broadcast scorer
-        (scorer.py:97-195). Output is bit-equal to :meth:`transform`
+        the driver once with ``toArrow``, packs one forest per segment, and
+        ships them inside a ``mapInArrow`` closure: zero shuffle, rows
+        scored in place, the same plan shape as the flagship's broadcast
+        scorer. Rows find their segment with Arrow's ``index_in``, which
+        matches keys as Spark's groupBy does (NULL = NULL, NaN = NaN,
+        NaN ≠ NULL). Output is bit-equal to :meth:`transform`
         (pytest-pinned) — same packed forests, psi, thresholds.
 
         Prefer :meth:`transform` for huge batch scoring jobs with MANY
@@ -359,100 +396,24 @@ class SegmentedIForestModel:
                 "too large to broadcast — score with transform() (batch) "
                 "or raise max_nodes if the driver/executors have headroom"
             )
-        key_col = self.key_col
-        node_pdf = self.nodes.toPandas()
-        forests = {}
-        # dropna=False + key normalization (round-7 review fix): pandas
-        # groupby silently DROPS None/NaN keys by default, which would
-        # make a fitted NULL-key segment score NULL here while
-        # transform() scores it — and NaN keys don't equal themselves, so
-        # both build and lookup go through _norm_key
-        for key, g in node_pdf.groupby(key_col, sort=False, dropna=False):
-            forests[_norm_key(key)] = (
-                pack_forest(pandas_to_forest(g)),
-                float(g["psi"].iloc[0]),
-                float(g["threshold"].iloc[0]),
+        node_table = _utc_key(self.nodes.withColumnRenamed(self.key_col, "_key").toArrow())
+        node_keys = node_table.column("_key")
+        model_keys = pc.unique(node_keys)
+        models = [
+            _segment_model(node_table.take(idx))
+            for _, idx in _group_positions(
+                pc.index_in(node_keys, value_set=model_keys, skip_nulls=False).to_numpy()
             )
+        ]
         fcol = features_col or self.features_col
-        sel = [F.col(key_col).alias("_key"), F.col(fcol).cast("array<double>").alias("_feat")]
-        if id_col is not None:
-            sel.insert(1, F.col(id_col).alias("_id"))
-        src = df.select(*sel)
-        key_type = df.schema[key_col].dataType.simpleString()
-        id_part = f"_id {df.schema[id_col].dataType.simpleString()}, " if id_col else ""
-        out_schema = f"_key {key_type}, {id_part}anomalyScore double, prediction int"
+        src, out_schema, rename = _scoring_io(df, self.key_col, fcol, id_col)
 
-        def score_chunk(pdf):
-            pdf = pdf.reset_index(drop=True)  # positions == labels
-            n = len(pdf)
-            groups = [
-                (g, forests.get(_norm_key(key)))
-                for key, g in pdf.groupby("_key", sort=False, dropna=False)
-            ]
-            scores_np = np.full(n, np.nan)
-            preds_np = np.zeros(n, dtype=np.int32)
-            covered = sum(len(g) for g, hit in groups if hit is not None)
-            if covered == n:
-                # every segment fitted (the steady state): ONE Arrow->numpy
-                # conversion for the whole chunk, groups score from
-                # row-index slices (the flagship scorer's conversion
-                # pattern, scorer.py:189) — per-group to_list()
-                # re-conversion was a measured ~20% of scoring wall at
-                # sf2.5
-                try:
-                    x_all = np.asarray(pdf["_feat"].to_list(), dtype=np.float64)
-                except ValueError:
-                    # segments are fitted independently, so one model may
-                    # legitimately carry different feature dims per
-                    # segment (review-caught): a ragged chunk can't
-                    # convert in one shot — score per group instead
-                    # (bit-equal, just the pre-batching conversion cost)
-                    x_all = None
-                for g, (forest, psi, thr) in groups:
-                    idx = g.index.to_numpy()
-                    x = (
-                        x_all[idx]
-                        if x_all is not None
-                        else np.asarray(g["_feat"].to_list(), dtype=np.float64)
-                    )
-                    s = _blocked_scores(forest, x, psi)
-                    scores_np[idx] = s
-                    preds_np[idx] = s > thr
-            else:
-                # unfitted segments present: convert ONLY fitted groups'
-                # rows — an unfitted segment's rows may carry NULL/ragged
-                # feature arrays (nothing was ever fitted on them), and a
-                # whole-chunk conversion would crash on rows the contract
-                # says must come back as NULL score/prediction
-                for g, hit in groups:
-                    if hit is None:
-                        continue
-                    forest, psi, thr = hit
-                    x = np.asarray(g["_feat"].to_list(), dtype=np.float64)
-                    idx = g.index.to_numpy()
-                    s = _blocked_scores(forest, x, psi)
-                    scores_np[idx] = s
-                    preds_np[idx] = s > thr
-            out = {"_key": pdf["_key"]}
-            if id_col is not None:
-                out["_id"] = pdf["_id"]
-            if covered == n:
-                # every segment fitted (the steady state): plain numpy
-                # columns, no masked-array write amplification
-                out["anomalyScore"] = scores_np
-                out["prediction"] = preds_np
-            else:
-                # unfitted segments must come back as true SQL NULLs, not
-                # NaN — fitted scores are never NaN (2^x > 0), so NaN
-                # marks exactly the uncovered rows
-                miss = np.isnan(scores_np)
-                sc = pd.array(scores_np, dtype="Float64")
-                sc[miss] = None
-                pr = pd.array(preds_np, dtype="Int32")
-                pr[miss] = None
-                out["anomalyScore"] = sc
-                out["prediction"] = pr
-            return pd.DataFrame(out)
+        def score_chunk(rows):
+            rows = _utc_key(rows)
+            seg = pc.fill_null(
+                pc.index_in(rows.column("_key"), value_set=model_keys, skip_nulls=False), -1
+            )
+            return _score_segments(rows, seg.to_numpy(), models, fcol).to_batches()
 
         def score_batches(it):
             # Buffer incoming Arrow batches to ~_SCORE_BUFFER_ROWS before
@@ -465,26 +426,18 @@ class SegmentedIForestModel:
             # memory is bounded by the buffer target, not the partition.
             buf = []
             buffered = 0
-            for pdf in it:
-                if not len(pdf):
+            for batch in it:
+                if not batch.num_rows:
                     continue
-                buf.append(pdf)
-                buffered += len(pdf)
+                buf.append(batch)
+                buffered += batch.num_rows
                 if buffered >= _SCORE_BUFFER_ROWS:
-                    yield score_chunk(
-                        pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-                    )
+                    yield from score_chunk(pa.Table.from_batches(buf).combine_chunks())
                     buf, buffered = [], 0
             if buf:
-                yield score_chunk(
-                    pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-                )
+                yield from score_chunk(pa.Table.from_batches(buf).combine_chunks())
 
-        result = src.mapInPandas(score_batches, schema=out_schema)
-        renames = [F.col("_key").alias(key_col)]
-        if id_col is not None:
-            renames.append(F.col("_id").alias(id_col))
-        return result.select(*renames, "anomalyScore", "prediction")
+        return rename(src.mapInArrow(score_batches, schema=out_schema))
 
     def save(self, path: str) -> None:
         """Persist to ``path`` on ANY Hadoop filesystem: the node relation
@@ -538,42 +491,34 @@ def fit_groups(
     scores (the reference's fit-scores-training-set semantics,
     IForest.scala:208-239), so transform on new data is a stateless map.
 
-    ONE ``groupBy(key).applyInPandas`` shuffle; each task emits its
-    segment's flat node rows — O(num_trees · psi) rows per segment,
+    ONE ``groupBy(key).applyInArrow`` shuffle; each task emits its
+    segment's ``nodes.tree_to_batch`` node table with the key and the
+    per-segment scalars appended — O(num_trees · psi) rows per segment,
     independent of segment size, so the model relation stays small even
     when segments are huge."""
-    src = df.select(
-        F.col(key_col).alias("_key"),
-        F.col(features_col).cast("array<double>").alias("_feat"),
-    )
+    src, _, _ = _scoring_io(df, key_col, features_col, None)
     key_type = df.schema[key_col].dataType.simpleString()
     out_schema = f"_key {key_type}, {FLAT_NODE_SCHEMA}, {_META_COLS}"
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["_key"].iloc[0]
-        n = len(pdf)
-        if n > max_rows_per_group:
-            raise ValueError(
-                f"segment {key!r} has {n} rows > max_rows_per_group="
-                f"{max_rows_per_group}; fit the global IForest on this "
-                "segment instead"
-            )
-        x = np.asarray(pdf["_feat"].to_list(), dtype=np.float64)
-        trees, psi = _segment_forest(
-            x, key, num_trees, max_samples, max_depth, max_features, seed
+    def fit(table):
+        table = _utc_key(table)
+        trees, psi, _, thr = _fit_segment(
+            table, features_col, num_trees, max_samples, max_depth,
+            max_features, contamination, seed, max_rows_per_group,
         )
-        scores = _blocked_scores(pack_forest(trees), x, float(psi))
-        thr = _order_stat_threshold(scores, contamination)
-        out = pa.Table.from_batches(
-            [tree_to_batch(t, tree) for t, tree in enumerate(trees)]
-        ).to_pandas()
-        out.insert(0, "_key", [key] * len(out))
-        return out.assign(psi=float(psi), threshold=thr, n_rows=n)
+        out = pa.Table.from_batches([tree_to_batch(t, tree) for t, tree in enumerate(trees)])
+        m = out.num_rows
+        return (
+            out.add_column(0, "_key", pa.repeat(table.column("_key")[0], m))
+            .append_column("psi", pa.repeat(pa.scalar(float(psi)), m))
+            .append_column("threshold", pa.repeat(pa.scalar(thr), m))
+            .append_column("n_rows", pa.repeat(pa.scalar(table.num_rows, pa.int64()), m))
+        )
 
     nodes = (
         _cluster_by_key(src)
         .groupBy("_key")
-        .applyInPandas(fit, schema=out_schema)
+        .applyInArrow(fit, schema=out_schema)
         .withColumnRenamed("_key", key_col)
     )
     params = {
@@ -600,7 +545,7 @@ def recalibrate_groups(
     stays cluster-side), takes each segment's exact
     ``ceil((1-contamination)·n)``-th smallest score (the same
     order-statistic definition fit uses, computed per segment in ONE
-    ``applyInPandas`` pass over the scored rows), and returns a model
+    ``applyInArrow`` pass over the scored rows), and returns a model
     with only the ``threshold`` column replaced. Segments of the model
     absent from ``df`` keep their old threshold. Recalibrating on the
     ORIGINAL training slice with the original contamination reproduces
@@ -608,16 +553,13 @@ def recalibrate_groups(
     key_col = model.key_col
     scored = model.transform(df).where(F.col("anomalyScore").isNotNull())
 
-    def thr(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
+    def thr(table):
+        table = _utc_key(table)
+        scores = table.column("anomalyScore").to_numpy()
+        return pa.table(
             {
-                "_key": [pdf["_key"].iloc[0]],
-                "_new_thr": [
-                    _order_stat_threshold(
-                        pdf["anomalyScore"].to_numpy(dtype=np.float64),
-                        contamination,
-                    )
-                ],
+                "_key": table.column("_key").slice(0, 1),
+                "_new_thr": [_order_stat_threshold(scores, contamination)],
             }
         )
 
@@ -625,7 +567,7 @@ def recalibrate_groups(
     new_thr = (
         _cluster_by_key(scored.select(F.col(key_col).alias("_key"), "anomalyScore"))
         .groupBy("_key")
-        .applyInPandas(thr, schema=f"_key {key_type}, _new_thr double")
+        .applyInArrow(thr, schema=f"_key {key_type}, _new_thr double")
         .withColumnRenamed("_key", key_col)
     )
     # null-SAFE splice: a NULL-key segment's new threshold must attach to

@@ -38,13 +38,14 @@ def test_transform_broadcast_plan_zero_shuffle(grouped):
     model.nodes.cache().count()  # freeze the model relation
     plan = formatted_plan(model.transform_broadcast(grouped, id_col="row_id"))
     assert "Exchange" not in plan
+    assert "MapInArrow" in plan and "InPandas" not in plan
     model.nodes.unpersist()
 
 
 def test_segmented_fit_single_exchange(grouped):
     """The explicit key-repartition must SATISFY the grouped-distribution
     requirement, not add a second exchange: exactly one shuffle between
-    scan and the grouped Pandas stage."""
+    scan and the grouped Arrow stage."""
     import re
 
     plan = formatted_plan(
@@ -54,7 +55,7 @@ def test_segmented_fit_single_exchange(grouped):
     # detail section — count detail headers
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
     assert "REPARTITION_BY_NUM" in plan  # user-specified => AQE-exempt
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
 
 
 def test_resolve_clusters_plan_no_window(spark):
@@ -62,3 +63,20 @@ def test_resolve_clusters_plan_no_window(spark):
     quality = spark.createDataFrame([(1, 0.5), (2, 0.9)], "doc_id long, quality double")
     plan = formatted_plan(dedup.resolve_clusters(None, labels=labels, quality=quality))
     assert "Window" not in plan
+
+
+def test_segmented_plans_have_no_pandas_stage(grouped):
+    """Every segmented stage runs on Arrow: no *InPandas operator in the
+    plans of fitting, cogroup scoring, recalibration or update."""
+    model = segmented.fit_groups(grouped, "seg", num_trees=5, max_samples=32)
+    plans = {
+        "fit_groups": formatted_plan(model.nodes),
+        "transform": formatted_plan(model.transform(grouped, id_col="row_id")),
+        "recalibrate_groups": formatted_plan(
+            segmented.recalibrate_groups(model, grouped, 0.1).nodes
+        ),
+        "update_groups": formatted_plan(segmented.update_groups(model, grouped, ["g1"]).nodes),
+    }
+    assert "FlatMapCoGroupsInArrow" in plans["transform"]
+    for name, plan in plans.items():
+        assert "InPandas" not in plan, name

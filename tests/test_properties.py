@@ -98,6 +98,21 @@ def test_kernel_matches_per_row_walk(x, n_rows, max_depth, seed):
     np.testing.assert_allclose(got, want, rtol=1e-12, atol=0)
     assert anomaly_scores(forest, batch[:0], psi).shape == (0,)
 
+    # past 16,384 rows the kernel descends in row blocks: every row still
+    # scores as it does in a small batch, and as the walk does
+    big = np.vstack([batch, rng.normal(0.5, 0.5, (16_384 + 5, x.shape[1]))])
+    got_big = anomaly_scores(forest, big, psi)
+    small = [anomaly_scores(forest, big[lo : lo + 5_000], psi) for lo in range(0, len(big), 5_000)]
+    np.testing.assert_array_equal(got_big, np.concatenate(small))
+    np.testing.assert_array_equal(got_big[: len(batch)], got)
+    tail = big[-3:]
+    np.testing.assert_allclose(
+        got_big[-3:],
+        [2.0 ** (-_walk_path_length(trees, r) / avg_length(psi)) for r in tail],
+        rtol=1e-12,
+        atol=0,
+    )
+
     # NaN compares False against every split, so an all-NaN row takes the
     # right child at every internal node
     right_most = 0.0

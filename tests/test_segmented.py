@@ -1,10 +1,15 @@
 """Segmented per-group isolation forests."""
 
 import numpy as np
+import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
+from pandas.testing import assert_frame_equal
 from pyspark.sql import functions as F
 
 from spark_iforest_spark import segmented
+from spark_iforest_spark.nodes import pack_forest
+from spark_iforest_spark.scorer import anomaly_scores
 
 
 @pytest.fixture(scope="module")
@@ -125,7 +130,7 @@ def test_fit_groups_layout_invariant_model(grouped):
         )
         trees, psi = segmented._segment_forest(x, key, 50, 256, 10, 1.0, 5)
         thr = segmented._order_stat_threshold(
-            segmented._blocked_scores(pack_forest(trees), x, float(psi)), 0.01
+            anomaly_scores(pack_forest(trees), x, float(psi)), 0.01
         )
         expected += [
             (key, *r, float(psi), thr, len(x))
@@ -408,3 +413,167 @@ def test_transform_broadcast_mixed_feature_dims(spark):
     for k, r in cg.items():
         assert bc[k].anomalyScore == r.anomalyScore
         assert bc[k].prediction == r.prediction
+
+
+def test_nan_null_and_real_double_keys_are_three_segments(spark):
+    """A NaN double key is a segment of its own, apart from the NULL
+    segment, as Spark's groupBy makes it: segments() lists three keys,
+    NaN-keyed rows come back keyed NaN (not NULL), and the in-place, the
+    cogroup and the broadcast paths agree bit for bit on the training
+    slice."""
+    rng = np.random.default_rng(12)
+    keys = [float("nan"), None, 1.0]
+    rows = [(keys[i % 3], i, rng.standard_normal(3).tolist()) for i in range(120)]
+    df = spark.createDataFrame(rows, "seg double, row_id long, features array<double>")
+    params = dict(num_trees=10, max_samples=16, contamination=0.1, seed=4)
+    model = segmented.fit_groups(df, "seg", **params)
+
+    def scored(out):
+        # repr keeps NaN comparable and apart from None
+        return sorted(
+            (r.row_id, repr(r.seg), r.anomalyScore, r.prediction) for r in out.collect()
+        )
+
+    via_cogroup = scored(model.transform(df, id_col="row_id"))
+    in_place = scored(segmented.fit_score_groups(df, "seg", id_col="row_id", **params))
+    assert via_cogroup == in_place
+    assert scored(model.transform_broadcast(df, id_col="row_id")) == in_place
+    assert [r[1] for r in in_place] == [repr(keys[i % 3]) for i in range(120)]
+    assert all(r[2] is not None for r in in_place)
+    segs = model.segments().collect()
+    assert sorted(repr(r.seg) for r in segs) == ["1.0", "None", "nan"]
+    assert all(r.n_rows == 40 for r in segs)
+
+
+@pytest.fixture(scope="module")
+def fitted(grouped):
+    model = segmented.fit_groups(grouped, "seg", num_trees=10, max_samples=32, seed=2)
+    model.nodes.cache().count()
+    yield model
+    model.nodes.unpersist()
+
+
+@pytest.mark.parametrize(
+    "bad, error",
+    [(None, "has 1 null row"), ([1.0, 2.0], "has rows of different lengths")],
+    ids=["null", "uneven"],
+)
+@pytest.mark.parametrize(
+    "entry", ["fit_score_groups", "fit_groups", "transform", "transform_broadcast"]
+)
+def test_bad_feature_row_in_fitted_segment_names_the_column(
+    grouped, fitted, spark, entry, bad, error
+):
+    """A null row, or a row of another length than its segment's, in a
+    segment that is fitted (or being fitted) raises the features
+    conversion's ValueError naming the column, on every entry point."""
+    extra = spark.createDataFrame(
+        [("g1", 9001, bad)], "seg string, row_id long, features array<double>"
+    )
+    # one partition: the broadcast scorer sees the bad row in the same
+    # batch as the segment's good rows
+    mixed = grouped.unionByName(extra).coalesce(1)
+    run = {
+        "fit_score_groups": lambda: segmented.fit_score_groups(
+            mixed, "seg", num_trees=10, max_samples=32
+        ),
+        "fit_groups": lambda: segmented.fit_groups(
+            mixed, "seg", num_trees=10, max_samples=32
+        ).nodes,
+        "transform": lambda: fitted.transform(mixed, id_col="row_id"),
+        "transform_broadcast": lambda: fitted.transform_broadcast(mixed, id_col="row_id"),
+    }[entry]
+    with pytest.raises(Exception, match=f"ValueError: features column 'features' {error}"):
+        run().collect()
+
+
+_KEY_VALUES = {
+    "string": st.sampled_from(["a", "b", None]),
+    "bigint": st.sampled_from([3, -7, None]),
+    "double": st.sampled_from([0.5, float("nan"), None]),
+}
+
+
+@pytest.mark.parametrize("key_type", sorted(_KEY_VALUES))
+@given(data=st.data())
+@settings(max_examples=3, deadline=None)
+def test_fit_score_groups_matches_driver_oracle(spark, key_type, data):
+    """fit_score_groups equals a driver-side group-by-key oracle built from
+    the shared kernels, on tiny inputs whose keys include NULL (and NaN
+    for doubles, a segment of its own)."""
+    n = data.draw(st.integers(1, 30), "rows")
+    d = data.draw(st.integers(1, 3), "width")
+    keys = data.draw(st.lists(_KEY_VALUES[key_type], min_size=n, max_size=n), "keys")
+    x_seed = data.draw(st.integers(0, 2**32 - 1), "x_seed")
+    kw = dict(
+        num_trees=4,
+        max_samples=data.draw(st.integers(2, 12), "max_samples"),
+        max_depth=6,
+        max_features=1.0,
+        seed=data.draw(st.integers(0, 2**31 - 1), "seed"),
+    )
+    contamination = data.draw(st.sampled_from([0.0, 0.1, 0.34]), "contamination")
+    # two decimals: repeated rows and tied scores happen
+    x = np.random.default_rng(x_seed).standard_normal((n, d)).round(2)
+    rows = [(k, i, x[i].tolist()) for i, k in enumerate(keys)]
+    df = spark.createDataFrame(rows, f"seg {key_type}, row_id long, features array<double>")
+    cols = ["seg", "row_id", "anomalyScore", "prediction"]
+
+    got = segmented.fit_score_groups(
+        df, "seg", id_col="row_id", contamination=contamination, **kw
+    ).collect()
+    got = pd.DataFrame(
+        [(repr(r.seg), r.row_id, r.anomalyScore, r.prediction) for r in got], columns=cols
+    )
+
+    groups = {}  # repr keeps NaN and None apart, like Spark's grouping
+    for k, i, _ in rows:
+        groups.setdefault(repr(k), (k, []))[1].append(i)
+    expected = []
+    for rk, (k, ids) in groups.items():
+        xs = x[ids]
+        trees, psi = segmented._segment_forest(xs, k, **kw)
+        s = anomaly_scores(pack_forest(trees), xs, float(psi))
+        thr = segmented._order_stat_threshold(s, contamination)
+        expected += [(rk, i, v, int(v > thr)) for i, v in zip(ids, s.tolist())]
+    expected = pd.DataFrame(expected, columns=cols)
+
+    def by_id(frame):
+        return frame.sort_values("row_id").reset_index(drop=True)
+
+    assert_frame_equal(by_id(got), by_id(expected), check_exact=True)
+
+
+def test_timestamp_keys_outside_utc_session(spark):
+    """Spark hands TIMESTAMP keys to a UDF in the session time zone and
+    takes them back only in UTC: with a non-UTC session every path still
+    runs, returns the same instants as keys, agrees bit for bit, and fits
+    the same forests as under UTC."""
+    import datetime
+
+    rng = np.random.default_rng(6)
+    t0 = datetime.datetime(2020, 1, 1, 12, 0)
+    keys = [t0, t0 + datetime.timedelta(hours=5), None]
+    rows = [(keys[i % 3], i, rng.standard_normal(3).tolist()) for i in range(90)]
+    params = dict(num_trees=5, max_samples=16, contamination=0.1, seed=3)
+
+    def scored(out):
+        return sorted(
+            (r.row_id, r.epoch, r.anomalyScore, r.prediction)
+            for r in out.select("*", F.unix_micros("seg").alias("epoch")).collect()
+        )
+
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        df = spark.createDataFrame(rows, "seg timestamp, row_id long, features array<double>")
+        in_utc = scored(segmented.fit_score_groups(df, "seg", id_col="row_id", **params))
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        model = segmented.fit_groups(df, "seg", **params)
+        in_place = scored(segmented.fit_score_groups(df, "seg", id_col="row_id", **params))
+        assert scored(model.transform(df, id_col="row_id")) == in_place
+        assert scored(model.transform_broadcast(df, id_col="row_id")) == in_place
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert in_place == in_utc
+    assert all(r[2] is not None for r in in_place)

@@ -8,9 +8,10 @@ formats every gate's plan at a small sf and reports, per query:
 * ``scans``    — ``Scan parquet`` occurrences (re-execution shows up here)
 * ``exch``     — ``Exchange`` occurrences (shuffle count incl. reuse)
 * ``smj/bhj``  — SortMergeJoin / BroadcastHashJoin occurrences
-* ``pyeval``   — Python-executed nodes (ArrowEvalPython, MapInPandas,
-  FlatMapGroupsInPandas, FlatMapCoGroupsInPandas) — the slow path; should
-  exist only where the operator is genuinely non-relational
+* ``pyeval``   — Python-executed nodes (ArrowEvalPython, and the Pandas
+  and Arrow forms of MapIn*, FlatMapGroupsIn* and FlatMapCoGroupsIn*) —
+  the slow path; should exist only where the operator is genuinely
+  non-relational
 * ``rdd``      — ``Scan ExistingRDD`` (materialized snapshot boundaries)
 
 With ``--check`` it exits non-zero if any query exceeds its scan budget
@@ -78,8 +79,8 @@ SCAN_BUDGET: dict[str, int] = {
 }
 
 PY_NODES = re.compile(
-    r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas"
-    r"|BatchEvalPython"
+    r"ArrowEvalPython|MapIn(?:Pandas|Arrow)|FlatMapGroupsIn(?:Pandas|Arrow)"
+    r"|FlatMapCoGroupsIn(?:Pandas|Arrow)|BatchEvalPython"
 )
 
 
