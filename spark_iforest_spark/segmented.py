@@ -76,16 +76,23 @@ def _group_seed(seed: int, key) -> np.random.SeedSequence:
     return np.random.SeedSequence([seed & 0x7FFFFFFF, h])
 
 
-def _utc_key(table: pa.Table) -> pa.Table:
-    """``table`` with a TIMESTAMP ``_key`` cast to UTC: the same instants.
-    Spark hands such keys to a UDF in the session time zone but accepts
-    them back only in UTC, and a UTC key seeds its segment the same way
-    whatever the session time zone."""
+def _canonical_key(table: pa.Table) -> pa.Table:
+    """``table`` with its ``_key`` as Spark groups it. A TIMESTAMP key is
+    cast to UTC, the same instants: Spark hands such keys to a UDF in the
+    session time zone but accepts them back only in UTC, and a UTC key
+    seeds its segment the same way whatever the session time zone. A
+    floating key's -0.0 becomes 0.0 (adding 0.0 keeps NaN and NULL), since
+    Spark groups the two together and Arrow's ``index_in`` would not."""
     i = table.schema.get_field_index("_key")
     t = table.schema.types[i]
+    key = table.column(i)
     if pa.types.is_timestamp(t) and t.tz is not None:
-        return table.set_column(i, "_key", table.column(i).cast(pa.timestamp(t.unit, "UTC")))
-    return table
+        key = key.cast(pa.timestamp(t.unit, "UTC"))
+    elif pa.types.is_floating(t):
+        key = pc.add(key, pa.scalar(0.0, t))
+    else:
+        return table
+    return table.set_column(i, "_key", key)
 
 
 def _segment_forest(
@@ -272,7 +279,7 @@ def fit_score_groups(
     src, out_schema, rename = _scoring_io(df, key_col, features_col, id_col)
 
     def fit_score(table):
-        table = _utc_key(table)
+        table = _canonical_key(table)
         _, _, scores, thr = _fit_segment(
             table, features_col, num_trees, max_samples, max_depth,
             max_features, contamination, seed, max_rows_per_group,
@@ -356,7 +363,7 @@ class SegmentedIForestModel:
             # the cogroup holds one segment: its model, or none if unfitted
             models = [_segment_model(model)] if model.num_rows else []
             seg = np.full(rows.num_rows, 0 if models else -1)
-            return _score_segments(_utc_key(rows), seg, models, fcol)
+            return _score_segments(_canonical_key(rows), seg, models, fcol)
 
         return rename(
             _cluster_by_key(src)
@@ -396,7 +403,7 @@ class SegmentedIForestModel:
                 "too large to broadcast — score with transform() (batch) "
                 "or raise max_nodes if the driver/executors have headroom"
             )
-        node_table = _utc_key(self.nodes.withColumnRenamed(self.key_col, "_key").toArrow())
+        node_table = _canonical_key(self.nodes.withColumnRenamed(self.key_col, "_key").toArrow())
         node_keys = node_table.column("_key")
         model_keys = pc.unique(node_keys)
         models = [
@@ -409,7 +416,7 @@ class SegmentedIForestModel:
         src, out_schema, rename = _scoring_io(df, self.key_col, fcol, id_col)
 
         def score_chunk(rows):
-            rows = _utc_key(rows)
+            rows = _canonical_key(rows)
             seg = pc.fill_null(
                 pc.index_in(rows.column("_key"), value_set=model_keys, skip_nulls=False), -1
             )
@@ -501,7 +508,7 @@ def fit_groups(
     out_schema = f"_key {key_type}, {FLAT_NODE_SCHEMA}, {_META_COLS}"
 
     def fit(table):
-        table = _utc_key(table)
+        table = _canonical_key(table)
         trees, psi, _, thr = _fit_segment(
             table, features_col, num_trees, max_samples, max_depth,
             max_features, contamination, seed, max_rows_per_group,
@@ -554,7 +561,7 @@ def recalibrate_groups(
     scored = model.transform(df).where(F.col("anomalyScore").isNotNull())
 
     def thr(table):
-        table = _utc_key(table)
+        table = _canonical_key(table)
         scores = table.column("anomalyScore").to_numpy()
         return pa.table(
             {
